@@ -55,7 +55,7 @@ final class MiniKafkaNode(val brokerId: Int, numPartitions: Int = 2,
   // incarnation uses.
   state.nextPid.set(
     if (pidBlock >= 0L) pidBlock else 1000L + brokerId.toLong * 1000000L)
-  val server = new MiniKafkaServer(numPartitions, 2, state, brokerId)
+  val server = new MiniKafkaServer(numPartitions, state, brokerId)
   def port: Int = server.port
 
   private val fetchers = scala.collection.concurrent.TrieMap
@@ -144,7 +144,7 @@ final class MiniKafkaNode(val brokerId: Int, numPartitions: Int = 2,
             val myLeo = log.synchronized(log.next)
             val set =
               try {
-                val (bytes, leaderHw) = KafkaWire.fetchV9Raw(conn, topic,
+                val (bytes, leaderHw) = KafkaWire.replicaFetch(conn, topic,
                   p, myLeo, brokerId, epoch, log.synchronized(log.start))
                 // the leader's advertised HW seeds this process's
                 // monotonic floor — a promotion serves consumers from

@@ -5,12 +5,12 @@ import graft.sources.KafkaWire.{Reader, Record, Writer}
 
 /** In-JVM broker DOUBLE for the Kafka wire-protocol client — the
   * S2/S3 analogue of the in-JVM HTTP server that proves the S11
-  * crawl: a real TCP listener speaking the same pre-flexible subset
-  * of the public protocol as [[graft.sources.KafkaWire]] (both record
-  * formats behind ApiVersions negotiation, idempotent-producer
-  * sequence state, the transaction coordinator with control markers /
-  * LSO / aborted-range serving, timestamp offset lookup, and
-  * consumer-group offset storage — see the dispatch table in serve()),
+  * crawl: a real TCP listener speaking the same subset of the public
+  * protocol as [[graft.sources.KafkaWire]] (record-batch v2 only, one
+  * version per data-path API, idempotent-producer sequence state,
+  * the transaction coordinator with control markers / LSO /
+  * aborted-range serving, timestamp offset lookup, and consumer-group
+  * offset storage — see the dispatch table in serve()),
   * with an in-memory per-partition log. Everything KafkaWire sends
   * travels through actual sockets and actual protocol bytes; only
   * durability is simulated. A TEST/BENCH DOUBLE — it lives in main
@@ -19,17 +19,16 @@ import graft.sources.KafkaWire.{Reader, Record, Writer}
   *
   * Broker-faithful serving (the parts a naive double gets wrong, and
   * that the r12 advice flagged as untestable until now):
-  *  - the log is stored at BATCH granularity, exactly as produced. A
-  *    gzipped produce stays one wrapper batch; a fetch at offset k is
-  *    served from the START of the batch containing k, so the client
-  *    sees below-cursor records it must drop (the real v1 broker's
-  *    whole-wrapper behavior);
-  *  - max_bytes is enforced on the WIRE BYTES of the encoded message
-  *    set and the response is sliced mid-message when the first batch
-  *    alone exceeds it — the consumer sees a partial trailing message
-  *    and zero complete records, and must grow-and-retry rather than
-  *    skip (the broker does NOT apply the at-least-one-message rule
-  *    of later protocol versions here; v2 fetch truncates).
+  *  - the log is stored at BATCH granularity, exactly as produced; a
+  *    fetch at offset k is served from the START of the batch
+  *    containing k, so the client sees below-cursor records it must
+  *    drop (the real broker's whole-batch behavior);
+  *  - max_bytes is enforced on the WIRE BYTES of the record set and
+  *    the response is sliced mid-batch when the first batch alone
+  *    exceeds it — the consumer sees a partial trailing batch and zero
+  *    complete records, and must grow-and-retry rather than skip (the
+  *    double does NOT apply the real broker's at-least-one-batch
+  *    rule).
   *
   * Fault injection (all one-shot counters, decremented as consumed):
   *  - [[dropNextProduce]]: read the Produce request fully, append
@@ -77,19 +76,16 @@ object MiniKafkaServer {
   * through its internal topics. */
 private[graft] final class KafkaClusterState(
     val replicationFactor: Int = 1, val minInsyncReplicas: Int = 1) {
-  /** One produced batch, stored verbatim: compressed batches
-    * (`codec` != 0) re-encode as ONE wrapper message on fetch (offset
-    * = last inner absolute, the v1 convention). `magic` records the
-    * format it ARRIVED in — fetch serves v2-stored batches back as v2
-    * to a v4 fetcher and DOWN-CONVERTS them (headers dropped) for a
-    * v2 fetcher, the real broker's split. */
+  /** One produced record batch, stored verbatim (`raw`, base offset
+    * and leader epoch patched in) with its decoded records for the
+    * test oracles; `codec` is the compression it arrived with. */
   final case class Batch(base: Long, records: Seq[Record],
-      codec: Int, magic: Int = 1, pid: Long = -1L, pEpoch: Int = -1,
-      baseSeq: Int = -1, raw: Array[Byte] = null,
+      codec: Int, pid: Long = -1L, pEpoch: Int = -1,
+      baseSeq: Int = -1, raw: Array[Byte],
       transactional: Boolean = false, control: Boolean = false,
       spanEnd: Long = -1L, epoch: Int = -1) {
     // a VAL: records may be a List (Scala 2.13 `.toSeq` builds one), so
-    // a def would be O(n) — and fetchV2's dropWhile calls end on every
+    // a def would be O(n) — and the fetch path's dropWhile calls end on every
     // batch below the cursor, turning each fetch into an O(log-size)
     // walk (measured 35 ms per EMPTY fetch at 500 k stored records).
     // `spanEnd` (set by compaction) preserves the batch's ORIGINAL
@@ -437,7 +433,7 @@ private[graft] final class KafkaClusterState(
             rb.endOffset > log.next),
         s"replica fetch out of order: local end ${log.next}, " +
           s"batch base ${rb.baseOffset}")
-      val b = Batch(rb.baseOffset, rb.records, rb.codec, magic = 2,
+      val b = Batch(rb.baseOffset, rb.records, rb.codec,
         pid = rb.producerId, pEpoch = rb.producerEpoch,
         baseSeq = rb.baseSequence, raw = rb.raw,
         transactional = rb.transactional, control = rb.control,
@@ -862,13 +858,7 @@ private[graft] final class KafkaClusterState(
     }
 }
 
-/** @param serveFormat highest record format this broker speaks: 2
-  *   (default) advertises Produce v3 / Fetch v4 / InitProducerId and
-  *   stores/serves magic-2 batches; 1 emulates a pre-0.11 broker —
-  *   ApiVersions caps at Produce v2 / Fetch v2, so a format-
-  *   negotiating client must downgrade to message-format v1 (the
-  *   both-formats test matrix drives the SAME client against both). */
-final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
+final class MiniKafkaServer(numPartitions: Int = 2,
     state: KafkaClusterState = new KafkaClusterState, brokerId: Int = 0) {
   import MiniKafkaServer.DropConnection
   import state._
@@ -901,7 +891,7 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
   /** Run `body` on follower `f`'s replica of (topic, p) under its
     * lock, after asserting the replica is positioned exactly at
     * `base` — the ONE divergence check every replication site uses
-    * (produce v1/v2 and transaction markers). Always called with the
+    * (produce and transaction markers). Always called with the
     * LEADER's log lock held, so lock order is leader-then-follower
     * everywhere. */
   private def replicateTo(f: Int, topic: String, p: Int, base: Long)(
@@ -1329,11 +1319,9 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
     * behavior, so cursors advance past gaps; a fully-compacted batch
     * is retained as an EMPTY v2 batch (records=0, span intact) — also
     * the real broker's shape. Control markers are not data and are
-    * kept. v1 compressed wrappers re-materialize as plain
-    * absolute-offset entries (the cleaner rewrites segments). The
-    * cleaner is transaction-aware: ABORTED records are removed (never
-    * a key's survivor) and nothing at/after the last stable offset is
-    * touched. */
+    * kept. The cleaner is transaction-aware: ABORTED records are
+    * removed (never a key's survivor) and nothing at/after the last
+    * stable offset is touched. */
   def compact(topic: String, p: Int, purgeTombstones: Boolean = false): Unit = {
     // each broker cleans its OWN replica (real cleaners run per broker)
     val log = this.log(topic, p)
@@ -1380,7 +1368,7 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
               transactional = b.transactional,
               lastOffsetDeltaOverride = (span - b.base - 1).toInt)
             if (b.epoch >= 0) KafkaWire.stampLeaderEpoch(raw, b.epoch)
-            b.copy(records = kept, codec = 0, magic = 2, raw = raw,
+            b.copy(records = kept, codec = 0, raw = raw,
               spanEnd = span)
           }
         }
@@ -1416,14 +1404,6 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
     l.synchronized(l.batches.map(_.codec).toSeq)
   }
 
-  /** The record format each stored batch arrived in (1 or 2) — the
-    * did-it-actually-negotiate oracle for the format handshake. */
-  def storedBatchMagics(topic: String, p: Int): Seq[Int] = {
-    val l = log(topic, p)
-    l.synchronized(l.batches.map(_.magic).toSeq)
-  }
-
-
   private def serve(sock: java.net.Socket): Unit = {
     sock.setTcpNoDelay(true) // response latency, not throughput batching
     val in = new java.io.DataInputStream(
@@ -1443,22 +1423,15 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
           // v1/v2: the v0 body plus trailing throttle_time_ms — inside
           // the advertised (0,3) range, so a client legitimately
           // negotiating mid-range must be served, not dropped
-          case (18, 1 | 2) if serveFormat >= 2 => apiVersionsV1or2()
-          case (18, 3) if serveFormat >= 2 => apiVersionsV3(r)
-          // every version INSIDE the advertised ranges is served — a
-          // negotiating client may legitimately pick any of them
-          case (3, 0) => metadataV(r, 0)
-          case (3, mv) if mv >= 1 && mv <= 8 && serveFormat >= 2 =>
-            metadataV(r, mv)
-          case (3, 9) if serveFormat >= 2 => metadataV9(r)
-          case (0, 2) => produceV2(r)
-          case (0, 3) if serveFormat >= 2 => produceV3(r)
-          case (1, 2) => fetchV(r, 2)
-          case (1, fv) if fv >= 3 && fv <= 9 && serveFormat >= 2 =>
-            fetchV(r, fv)
+          case (18, 1 | 2) => apiVersionsV1or2()
+          case (18, 3) => apiVersionsV3(r)
+          // the data path: exactly the one version each API advertises
+          case (0, 3) => produceV3(r)
+          case (1, 9) => fetchV9(r)
+          case (2, 2) => listOffsetsV2(r)
+          case (3, 9) => metadataV9(r)
           case (4, 0) => leaderAndIsrV0(r)
-          case (23, 2) if serveFormat >= 2 => offsetsForLeaderEpochV2(r)
-          case (2, 1) => listOffsetsV1(r)
+          case (23, 2) => offsetsForLeaderEpochV2(r)
           case (8, 2) => offsetCommitV2(r)
           case (9, 1) => offsetFetchV1(r)
           case (10, 0) => findCoordinatorV0(r)
@@ -1469,12 +1442,11 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
           case (12, 0) => heartbeatV0(r)
           case (13, 0) => leaveGroupV0(r)
           case (14, 0) => syncGroupV0(r)
-          case (2, 2) if serveFormat >= 2 => listOffsetsV2(r)
-          case (22, 0) if serveFormat >= 2 => initProducerIdV0(r)
-          case (24, 0) if serveFormat >= 2 => addPartitionsToTxnV0(r)
-          case (25, 0) if serveFormat >= 2 => addOffsetsToTxnV0(r)
-          case (26, 0) if serveFormat >= 2 => endTxnV0(r)
-          case (28, 0) if serveFormat >= 2 => txnOffsetCommitV0(r)
+          case (22, 0) => initProducerIdV0(r)
+          case (24, 0) => addPartitionsToTxnV0(r)
+          case (25, 0) => addOffsetsToTxnV0(r)
+          case (26, 0) => endTxnV0(r)
+          case (28, 0) => txnOffsetCommitV0(r)
           case other => sys.error(s"unsupported api $other")
         }
         val sentCorr =
@@ -1496,24 +1468,14 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
   }
 
   /** The advertised (api, min, max) table — one source for every
-    * ApiVersions generation. A serveFormat=1 broker advertises only
-    * the pre-v2-format versions — a negotiating client MUST downgrade
-    * to message format v1 (and the dispatch above enforces it: v3/v4
-    * requests against this broker fail, exactly like a real old
-    * broker); it also predates flexible versions, so ApiVersions caps
-    * at v0 and Metadata at v0 there. */
-  private def apiTable: Seq[(Int, Int, Int)] =
-    if (serveFormat >= 2)
-      Seq((0, 2, 3), (1, 2, 9), (2, 1, 2), (3, 0, 9), (4, 0, 0),
-        (8, 2, 2), (9, 1, 1), (10, 0, 0), (11, 0, 1), (12, 0, 0),
-        (13, 0, 0), (14, 0, 0), (15, 0, 0), (16, 0, 0), (18, 0, 3),
-        (21, 0, 0), (22, 0, 0), (23, 2, 2), (24, 0, 0), (25, 0, 0),
-        (26, 0, 0), (28, 0, 0))
-    // group coordination predates message-format v2 — an old broker
-    // speaks it too, so both format matrices advertise it
-    else Seq((0, 2, 2), (1, 2, 2), (2, 1, 1), (3, 0, 0), (8, 2, 2),
-      (9, 1, 1), (10, 0, 0), (11, 0, 1), (12, 0, 0), (13, 0, 0),
-      (14, 0, 0), (15, 0, 0), (16, 0, 0), (18, 0, 0), (21, 0, 0))
+    * ApiVersions generation, and exactly what the dispatch in serve()
+    * answers. */
+  private val apiTable: Seq[(Int, Int, Int)] =
+    Seq((0, 3, 3), (1, 9, 9), (2, 2, 2), (3, 9, 9), (4, 0, 0),
+      (8, 2, 2), (9, 1, 1), (10, 0, 0), (11, 0, 1), (12, 0, 0),
+      (13, 0, 0), (14, 0, 0), (15, 0, 0), (16, 0, 0), (18, 0, 3),
+      (21, 0, 0), (22, 0, 0), (23, 2, 2), (24, 0, 0), (25, 0, 0),
+      (26, 0, 0), (28, 0, 0))
 
   private def apiVersionsV0(): Array[Byte] = {
     val apis = apiTable
@@ -1554,10 +1516,13 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
     w.result()
   }
 
-  /** Metadata v9 — the FLEXIBLE encoding of the v7 view (KIP-482):
-    * same fields as [[metadataV7]] plus the v8 authorized-operations
-    * ints, compact strings/arrays and tag buffers throughout, request
-    * header v2, response header v1 (the leading tag buffer below). */
+  /** Metadata v9 (api 3), the flexible encoding (KIP-482): compact
+    * strings/arrays and tag buffers throughout, request header v2,
+    * response header v1 (the leading tag buffer below). Each partition
+    * row carries its leader_epoch (KIP-320's client-side fencing
+    * token): a routing client pins its fetches to it, so a stale view
+    * after a re-election is FENCED by the leader instead of silently
+    * served. */
   private def metadataV9(r: Reader): Array[Byte] = {
     r.skipTags() // request header v2's tag buffer
     val n = r.compactArrayLen()
@@ -1600,59 +1565,6 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
     }
     w.int32(Int.MinValue) // cluster_authorized_operations
     w.tagsEmpty()
-    w.result()
-  }
-
-  /** Metadata v0 through v8 — ONE handler with per-field version
-    * gates, because ApiVersions advertises a contiguous RANGE and a
-    * real client may legitimately pick ANY version in it (the field
-    * timeline: rack/is_internal/controller_id v1, cluster_id v2,
-    * throttle v3, allow_auto_topic_creation v4, offline_replicas v5,
-    * leader_epoch v7 — KIP-320's client-side fencing token —
-    * authorized_operations v8). v9+ is the flexible encoding
-    * ([[metadataV9]]). A routing client that reads the epoch here
-    * pins its fetches to it: a stale view after a re-election is
-    * FENCED by the leader instead of silently served. */
-  private def metadataV(r: Reader, v: Int): Array[Byte] = {
-    val n = r.int32()
-    require(n >= 0 || v == 0, s"metadata v$v with null topics " +
-      "(all-topics) is not served by the double — name the topics")
-    val topics = (0 until math.max(0, n)).map(_ => r.str())
-    if (v >= 4) r.int8() // allow_auto_topic_creation — the double auto-creates
-    if (v >= 8) { r.int8(); r.int8() } // include cluster/topic authorized ops
-    val w = new Writer()
-    if (v >= 3) w.int32(0) // throttle_time_ms
-    // the FULL cluster view: every registered broker, and each
-    // partition's true leader — what a routing client steers by
-    val bs = state.brokers.toSeq.sortBy(_._1)
-    w.int32(bs.length)
-    bs.foreach { case (id, (h, pt)) =>
-      w.int32(id).str(h).int32(pt)
-      if (v >= 1) w.str(null) // rack: none
-    }
-    if (v >= 2) w.str("graft-cluster") // cluster_id
-    if (v >= 1) w.int32(0)             // controller_id (broker 0 convention)
-    w.int32(topics.length)
-    topics.foreach { t =>
-      w.int16(0).str(t)
-      if (v >= 1) w.int8(0) // is_internal = false
-      w.int32(numPartitions)
-      (0 until numPartitions).foreach { p =>
-        val leader = leaderOf(t, p)
-        val replicas = state.assignmentOf(t, p)
-        val isr = state.isrOf(t, p).toSeq.sorted
-        w.int16(0).int32(p).int32(leader) // error, partition, leader
-        if (v >= 7) w.int32(state.leaderEpochOf(t, p))
-        w.int32(replicas.length); replicas.foreach(w.int32)
-        w.int32(isr.length); isr.foreach(w.int32)
-        if (v >= 5) {
-          val offline = replicas.filter(state.deadBrokers.contains)
-          w.int32(offline.length); offline.foreach(w.int32)
-        }
-      }
-      if (v >= 8) w.int32(Int.MinValue) // topic_authorized_operations
-    }
-    if (v >= 8) w.int32(Int.MinValue) // cluster_authorized_operations
     w.result()
   }
 
@@ -1712,37 +1624,30 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
       else 0
     }
 
-  /** Fetch v2 through v9 (api 1) — ONE handler with per-field version
-    * gates, because ApiVersions advertises a contiguous RANGE and a
-    * real client may pick ANY version in it. The field timeline:
-    * response max_bytes v3, isolation_level + last_stable_offset +
-    * aborted_transactions v4 (also the first record-batch-v2-carrying
-    * version — below it batches DOWN-CONVERT to message format v1),
-    * log_start_offset v5, session_id/epoch + forgotten_topics +
-    * top-level error v7 (the double is SESSIONLESS: session_id 0 on
-    * every response — the protocol's full-fetch degenerate case), and
-    * CURRENT_LEADER_EPOCH v9 (KIP-320) — the broker fences a fetch
-    * pinned to a superseded epoch instead of serving it, closing the
+  /** Fetch v9 (api 1): isolation_level + last_stable_offset +
+    * aborted_transactions (the read_committed contract),
+    * log_start_offset, session_id/epoch + forgotten_topics + top-level
+    * error (the double is SESSIONLESS: session_id 0 on every response
+    * — the protocol's full-fetch degenerate case), and
+    * CURRENT_LEADER_EPOCH (KIP-320) — the broker fences a fetch pinned
+    * to a superseded epoch instead of serving it, closing the
     * stale-metadata window an in-process monitor cannot close for an
     * out-of-process client. */
-  private def fetchV(r: Reader, v: Int): Array[Byte] = {
+  private def fetchV9(r: Reader): Array[Byte] = {
     val replicaId = r.int32()       // >= 0: a FOLLOWER's fetch
     r.int32(); r.int32()            // max_wait, min_bytes
-    if (v >= 3) r.int32()           // response max_bytes
-    val isolation = if (v >= 4) r.int8() else 0
-    val committed = isolation == 1
-    if (v >= 7) { r.int32(); r.int32() } // session_id, session_epoch
-    val enc: Batch => Array[Byte] =
-      if (v >= 4) encodeBatchV4 else encodeBatch
+    r.int32()                       // response max_bytes
+    val committed = r.int8() == 1   // isolation_level
+    r.int32(); r.int32()            // session_id, session_epoch
     val nTopics = r.int32()
     val resp = (0 until nTopics).map { _ =>
       val topic = r.str()
       val nParts = r.int32()
       val parts = (0 until nParts).map { _ =>
         val p = r.int32()
-        val curEpoch = if (v >= 9) r.int32() else -1
+        val curEpoch = r.int32()
         val off = r.int64()
-        if (v >= 5) r.int64() // follower's log_start_offset
+        r.int64() // follower's log_start_offset
         val maxBytes = r.int32()
         val gate = epochGate(topic, p, curEpoch)
         if (gate != 0)
@@ -1764,7 +1669,7 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
             mon.synchronized(mon.notifyAll())
           }
           val (err, hw, lso, aborted, bytes) = servePartition(topic, p,
-            off, maxBytes, enc, stableOnly = committed,
+            off, maxBytes, stableOnly = committed,
             asReplica = replicaId >= 0)
           val lg = log(topic, p)
           val logStart = lg.synchronized(lg.start)
@@ -1774,27 +1679,21 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
       }
       (topic, parts)
     }
-    if (v >= 7) {
-      // forgotten_topics_data: sessionless double — must still consume
-      // the bytes to leave the reader positioned correctly
-      val nForgotten = r.int32()
-      (0 until nForgotten).foreach { _ =>
-        r.str(); val k = r.int32(); (0 until k).foreach(_ => r.int32())
-      }
+    // forgotten_topics_data: sessionless double — must still consume
+    // the bytes to leave the reader positioned correctly
+    val nForgotten = r.int32()
+    (0 until nForgotten).foreach { _ =>
+      r.str(); val k = r.int32(); (0 until k).foreach(_ => r.int32())
     }
     val w = new Writer().int32(0) // throttle_time_ms
-    if (v >= 7) w.int16(0).int32(0) // top-level error, session_id
-    w.int32(resp.length)
+      .int16(0).int32(0)          // top-level error, session_id
+      .int32(resp.length)
     resp.foreach { case (topic, parts) =>
       w.str(topic).int32(parts.length)
       parts.foreach { case (p, err, hw, lso, logStart, aborted, set) =>
-        w.int32(p).int16(err).int64(hw)
-        if (v >= 4) {
-          w.int64(lso)
-          if (v >= 5) w.int64(logStart)
-          w.int32(aborted.length)
-          aborted.foreach { case (pid, first) => w.int64(pid).int64(first) }
-        }
+        w.int32(p).int16(err).int64(hw).int64(lso).int64(logStart)
+        w.int32(aborted.length)
+        aborted.foreach { case (pid, first) => w.int64(pid).int64(first) }
         w.int32(set.length).raw(set)
       }
     }
@@ -1840,82 +1739,6 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
     w.result()
   }
 
-  private def produceV2(r: Reader): Array[Byte] = {
-    if (consume(dropNextProduce)) throw new DropConnection
-    val reqAcks = r.int16(); r.int32() // acks, timeout
-    val nTopics = r.int32()
-    val acks = (0 until nTopics).flatMap { _ =>
-      val topic = r.str()
-      val nParts = r.int32()
-      (0 until nParts).map { _ =>
-        val p = r.int32()
-        val set = r.bytes()
-        val appended: (Int, Long, Long) = // (err, base, appendedEnd)
-        if (leaderOf(topic, p) != brokerId)
-          (KafkaWire.Errors.NotLeaderForPartition, -1L, -1L)
-        else state.electionLock(topic, p) {
-          // leadership re-checked INSIDE the election monitor: an
-          // append cannot interleave with a concurrent re-election
-          // (the in-process leader-epoch fence — see electionLock)
-          if (state.leaderOf(topic, p) != brokerId)
-            (KafkaWire.Errors.NotLeaderForPartition, -1L, -1L)
-          else {
-          // ONE paused-set snapshot for the whole gate+replicate
-          // critical section — a pause cannot land between them
-          val paused = state.pausedSnapshot
-          val gate = if (reqAcks == -1) acksAllGate(topic, p, paused) else 0
-          if (gate != 0) (gate, -1L, -1L)
-          else {
-            // a produced set is one batch; remember the codec it arrived
-            // with so fetch can serve it back as the same wrapper shape
-            val codec = if (set.length >= 18 && set(16) == 1)
-              set(17) & 0x07 else 0 // [offset 8][size 4][crc 4][magic@16][attrs@17]
-            val recs = KafkaWire.decodeMessageSet(set)
-            val l = log(topic, p)
-            val targets = replicationTargets(topic, p, brokerId, paused)
-            val base = l.synchronized {
-              val b = l.next
-              val batch = Batch(b,
-                recs.zipWithIndex.map { case (rec, i) =>
-                  Record(b + i, rec.timestamp, rec.key, rec.value) }.toSeq,
-                codec, epoch = state.leaderEpochOf(topic, p))
-              l.batches += batch
-              l.next = batch.end
-              // replicate INSIDE the leader lock: append order is
-              // replication order, so in-sync copies stay identical
-              targets.foreach(f => replicateTo(f, topic, p, b) { fl =>
-                fl.batches += batch; fl.next = batch.end
-              })
-              b
-            }
-            producesAppended.incrementAndGet()
-            (0, base, base + recs.length)
-          }
-          }
-        }
-        // the pull-mode acks=all wait runs OUTSIDE the election lock:
-        // it can park for the full replication timeout, and holding
-        // the monitor that long would serialize every other produce
-        // and marker write on the partition behind one slow follower
-        val (err0, base, end) = appended
-        val ackErr =
-          if (err0 == 0 && reqAcks == -1 && end >= 0)
-            awaitAcksAll(topic, p, end) else err0
-        (topic, p, ackErr, base)
-      }
-    }
-    if (consume(dropNextProduceAfterAppend)) throw new DropConnection
-    val w = new Writer().int32(nTopics)
-    acks.groupBy(_._1).foreach { case (topic, parts) =>
-      w.str(topic).int32(parts.length)
-      parts.foreach { case (_, p, err, base) =>
-        w.int32(p).int16(err).int64(base).int64(-1L)
-      }
-    }
-    w.int32(0) // throttle_time_ms
-    w.result()
-  }
-
   /** Append one v2 batch under the idempotence rules; returns
     * (errorCode, baseOffset). Must run under log.synchronized.
     * `countOracle` = false for REPLICATION copies: [[producesAppended]]
@@ -1928,25 +1751,20 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
       val base = log.next
       // store the producer's VERBATIM batch bytes with the assigned
       // base patched in (baseOffset lives outside the CRC32C coverage
-      // for exactly this) — fetch v4 re-serves them zero-re-encode,
-      // the real broker's append->fetch path; decoded records are kept
-      // for the test oracles and v1 down-conversion
+      // for exactly this) — fetch re-serves them zero-re-encode, the
+      // real broker's append->fetch path; decoded records are kept
+      // for the test oracles
       // the epoch is stamped into the batch's RAW bytes here, ONCE,
       // under the log lock (rawAt already clones; bytes 12..15 sit
       // outside the CRC32C coverage precisely for broker stamping) —
       // never on the serve path, where a concurrent in-place stamp
       // could be read torn by another fetch copying the same array
-      val raw =
-        if (b.raw == null) null
-        else {
-          val x = b.rawAt(base)
-          if (leaderEpoch >= 0) KafkaWire.stampLeaderEpoch(x, leaderEpoch)
-          x
-        }
+      val raw = b.rawAt(base)
+      if (leaderEpoch >= 0) KafkaWire.stampLeaderEpoch(raw, leaderEpoch)
       log.batches += Batch(base,
         b.records.zipWithIndex.map { case (rec, i) =>
           rec.copy(offset = base + i) },
-        b.codec, magic = 2, pid = b.producerId, pEpoch = b.producerEpoch,
+        b.codec, pid = b.producerId, pEpoch = b.producerEpoch,
         baseSeq = b.baseSequence,
         raw = raw,
         transactional = b.transactional, epoch = leaderEpoch)
@@ -2058,9 +1876,10 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
         (err, base, end)
         }
         }
-        // pull-mode acks=all wait OUTSIDE the election lock (see
-        // produceV2): parking with the monitor held would serialize
-        // the partition's whole write path behind one slow follower
+        // the pull-mode acks=all wait runs OUTSIDE the election lock:
+        // it can park for the full replication timeout, and holding the
+        // monitor that long would serialize the partition's whole write
+        // path (produces and marker writes) behind one slow follower
         val (err0, base, end) = appended
         val ackErr =
           if (err0 == 0 && reqAcks == -1 && end >= 0)
@@ -2131,7 +1950,7 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
               KafkaWire.encodeControlBatch(off, pid, epoch,
                 commit, System.currentTimeMillis()), lEpoch)
             val recs = KafkaWire.decodeRecordBatches(raw).head.records
-            val marker = Batch(off, recs, 0, magic = 2, pid = pid,
+            val marker = Batch(off, recs, 0, pid = pid,
               pEpoch = epoch, baseSeq = -1, raw = raw,
               transactional = true, control = true,
               epoch = lEpoch)
@@ -2336,89 +2155,13 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
     w.result()
   }
 
-  private def listOffsetsV1(r: Reader): Array[Byte] = {
-    r.int32() // replica_id
-    val nTopics = r.int32()
-    val resp = (0 until nTopics).map { _ =>
-      val topic = r.str()
-      val nParts = r.int32()
-      val parts = (0 until nParts).map { _ =>
-        val p = r.int32(); val ts = r.int64()
-        // the real broker's contract: offset lookups are LEADER-only
-        // (the offset index lives with the log) — clients route them
-        if (leaderOf(topic, p) != brokerId)
-          (p, KafkaWire.Errors.NotLeaderForPartition, -1L)
-        else (p, 0, offsetFor(log(topic, p), ts, isolation = 0,
-          state.highWatermark(topic, p)))
-      }
-      (topic, parts)
-    }
-    val w = new Writer().int32(resp.length)
-    resp.foreach { case (topic, parts) =>
-      w.str(topic).int32(parts.length)
-      parts.foreach { case (p, err, off) =>
-        w.int32(p).int16(err).int64(-1L).int64(off)
-      }
-    }
-    w.result()
-  }
-
-  /** Encode one stored batch the way a v1 broker serves it: plain
-    * batches as per-record messages with their absolute offsets,
-    * compressed batches as ONE wrapper (same codec) whose offset is
-    * the last inner absolute. A magic-2 stored batch served here is
-    * the real broker's DOWN-CONVERSION: headers drop, per-record
-    * timestamps survive (plain) or flatten to the wrapper max
-    * (compressed). */
-  private def encodeBatch(b: Batch): Array[Byte] =
-    if (b.control) Array.emptyByteArray // markers have no v1 form:
-      // an old consumer sees an offset gap, exactly like a compacted
-      // topic's removed records
-    else if (b.codec == 0) KafkaWire.encodeMessageSetAt(b.records)
-    else {
-      // the v1 wrapper convention stamps the MAX inner timestamp
-      val set = KafkaWire.encodeMessageSetCompressed(
-        b.records.map(r => (r.key, r.value)),
-        b.records.iterator.map(_.timestamp).max, b.codec)
-      // encodeMessageSetGzip frames the wrapper at relative offset 0;
-      // patch the first 8 bytes to the broker-assigned absolute of the
-      // LAST inner message (the v1 wrapper convention)
-      val abs = b.end - 1
-      var i = 0
-      while (i < 8) { set(i) = (abs >> (56 - 8 * i)).toByte; i += 1 }
-      set
-    }
-
-  /** Encode one stored batch for a v4 fetcher: magic-2 batches
-    * re-encode as v2 (idempotence fields and headers intact), magic-1
-    * batches serve AS STORED — a real broker never up-converts old
-    * segments; the modern consumer decodes both (the entry-offset-16
-    * magic dispatch). */
-  private def encodeBatchV4(b: Batch): Array[Byte] =
-    if (b.magic >= 2) {
-      if (b.raw != null) b.raw // verbatim bytes, CRC intact, epoch
-        // already stamped AT APPEND TIME (never here: an in-place
-        // stamp on the shared stored array could be read torn by a
-        // concurrent fetch copying the same bytes)
-      else {
-        // v2-stored batch without raw bytes (a replication copy of a
-        // v2 batch constructed from records): encode fresh and stamp
-        // the fresh array — private to this call, no sharing
-        val bytes = KafkaWire.encodeRecordBatch(b.base, b.records,
-          b.codec, b.pid, b.pEpoch, b.baseSeq)
-        if (b.epoch >= 0) KafkaWire.stampLeaderEpoch(bytes, b.epoch)
-        bytes
-      }
-    }
-    else encodeBatch(b)
-
-  /** Serve one partition's record set from `off` under `maxBytes`,
-    * encoding each stored batch with `enc`: (highWatermark, bytes). */
-  /** @param stableOnly serve only batches wholly below the last
+  /** Serve one partition's record set from `off` under `maxBytes`:
+    * (error, highWatermark, lastStable, aborted ranges, bytes).
+    * @param stableOnly serve only batches wholly below the last
     *   stable offset — the read_committed contract; open-transaction
     *   data never reaches a committed reader. */
   private def servePartition(topic: String, p: Int, off: Long,
-      maxBytes: Int, enc: Batch => Array[Byte],
+      maxBytes: Int,
       stableOnly: Boolean = false,
       asReplica: Boolean = false): (Int, Long, Long, Seq[(Long, Long)], Array[Byte]) = {
     // only the LEADER serves the data path — a routing client that
@@ -2442,10 +2185,8 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
         hwm, log.synchronized(math.min(log.lso, hwm)), Nil,
         Array.emptyByteArray)
     val (from, hw, lso, aborted) = log.synchronized {
-      // a PLAIN v1 message set is addressable per message — the broker
-      // serves from the exact offset; a compressed wrapper and a v2
-      // record batch are ATOMIC, so the whole batch ships even when
-      // `off` is inside it (the below-cursor records the client drops)
+      // a record batch is ATOMIC, so the whole batch ships even when
+      // `off` is inside it (the below-cursor records the client drops);
       // a FOLLOWER fetch is served to the leader's LOG END, not the
       // high watermark — replication is what ADVANCES the watermark,
       // so bounding followers by it would deadlock the pipeline
@@ -2454,23 +2195,20 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
         else math.min(hwm, if (stableOnly) log.lso else Long.MaxValue)
       val fromBatch = log.batches.toSeq
         .dropWhile(_.end <= off).takeWhile(_.end <= bound)
-      val sliced = fromBatch match {
-        case head +: rest
-            if head.magic == 1 && head.codec == 0 && head.base < off =>
-          head.copy(records = head.records.filter(_.offset >= off)) +: rest
-        case other => other
-      }
       // aborted ranges whose marker is at/after the fetch position —
       // anything earlier cannot have data in this response
       val ab = log.aborted.toSeq.filter(_._3 >= off)
         .map { case (pid, first, _) => (pid, first) }
-      (sliced, hwm, math.min(log.lso, hwm), ab)
+      (fromBatch, hwm, math.min(log.lso, hwm), ab)
     }
     val bytes = {
       val bos = new java.io.ByteArrayOutputStream()
       val it = from.iterator
       while (it.hasNext && bos.size < maxBytes)
-        bos.write(enc(it.next()))
+        // the stored bytes verbatim: CRC intact, epoch already stamped
+        // AT APPEND TIME (never here: an in-place stamp on the shared
+        // stored array could be read torn by a concurrent fetch)
+        bos.write(it.next().raw)
       val all = bos.toByteArray
       // the fetch response slices the record set AT max_bytes — a
       // partial trailing entry is the client's problem (it drops it
@@ -2524,7 +2262,7 @@ final class MiniKafkaServer(numPartitions: Int = 2, serveFormat: Int = 2,
   * contract a real producer/consumer pair depends on when a broker
   * dies holding unreplicated data. */
 final class MiniKafkaCluster(numBrokers: Int, numPartitions: Int = 2,
-    serveFormat: Int = 2, replicationFactor: Int = 1,
+    replicationFactor: Int = 1,
     minInsyncReplicas: Int = 1) {
   require(numBrokers >= 1)
   require(replicationFactor <= numBrokers,
@@ -2532,7 +2270,7 @@ final class MiniKafkaCluster(numBrokers: Int, numPartitions: Int = 2,
   val state = new KafkaClusterState(replicationFactor, minInsyncReplicas)
   private val initial: Seq[MiniKafkaServer] =
     (0 until numBrokers).map(i =>
-      new MiniKafkaServer(numPartitions, serveFormat, state, i))
+      new MiniKafkaServer(numPartitions, state, i))
   /** Brokers revived after [[failBroker]] — a fresh listener (new
     * port, same brokerId) over the broker's surviving replica logs. */
   private val revived =
@@ -2602,7 +2340,7 @@ final class MiniKafkaCluster(numBrokers: Int, numPartitions: Int = 2,
     state.pausedReplicas.remove(brokerId)
     state.rearmHwPinWarnings()
     revived.put(brokerId,
-      new MiniKafkaServer(numPartitions, serveFormat, state, brokerId))
+      new MiniKafkaServer(numPartitions, state, brokerId))
     state.catchUp(brokerId)
   }
   /** Data oracle: the CURRENT LEADER's replica of (topic, p) — the

@@ -235,7 +235,7 @@ object StreamBench {
     * in-JVM broker double over loopback TCP, at 1× and 10× volume and
     * at 1 vs 4 topic partitions. Loopback removes the network from the
     * measurement on purpose — what remains IS the engine's cost: the
-    * protocol codec (message v1 framing + CRC32 per record), murmur2
+    * protocol codec (record-batch v2 framing + CRC32C per batch), murmur2
     * routing, the 500-record produce batching, and the per-partition
     * executor-side fetch loops. The reference's cadence is one article
     * per 10 s (collect/producer.py's sleep loop, ~0.1 row/s); the
@@ -252,9 +252,8 @@ object StreamBench {
         lit("\",\"summary\":\"" + pad + "\"}")).as("value"))
       .repartition(8) // fixed client parallelism; broker partitions vary
 
-    def once(n: Int, nParts: Int, serveFormat: Int = 2): (Double, Double) = {
-      val srv = new MiniKafkaServer(numPartitions = nParts,
-        serveFormat = serveFormat)
+    def once(n: Int, nParts: Int): (Double, Double) = {
+      val srv = new MiniKafkaServer(numPartitions = nParts)
       try {
         // materialize the input first: the bench measures the
         // TRANSPORT (codec + routing + sockets), not range/shuffle
@@ -275,16 +274,10 @@ object StreamBench {
     }
 
     once(5000, 4) // JIT/codegen warmup, unmeasured
-    // fmt dimension: the SAME client against a modern broker
-    // (negotiates record-batch v2: varint records, CRC32C, Produce
-    // v3/Fetch v4) and a pre-0.11 one (downgrades to message v1) —
-    // the r13 directive's "throughput table re-run on v2"
-    val results = for (fmt <- Seq(2, 1); scale <- Seq(1, 10);
-        nParts <- Seq(1, 4)) yield {
+    val results = for (scale <- Seq(1, 10); nParts <- Seq(1, 4)) yield {
       val n = 50000 * scale
-      val (produceSecs, consumeSecs) = once(n, nParts, serveFormat = fmt)
-      val tag = if (fmt == 2) "" else "v1_"
-      s""""$tag${"x"}${scale}_p$nParts":{"rows":$n,""" +
+      val (produceSecs, consumeSecs) = once(n, nParts)
+      s""""x${scale}_p$nParts":{"rows":$n,""" +
         s""""produce_secs":${r3(produceSecs)},""" +
         s""""produce_rps":${r3(n / produceSecs)},""" +
         s""""consume_secs":${r3(consumeSecs)},""" +
@@ -292,20 +285,20 @@ object StreamBench {
     }
 
     // codec dimension — the network-efficiency lever at 100 TB, where
-    // the wire is real: produce through the DSv2 sink with each v1
-    // codec (200 k rows, 4 partitions), consume back through the
-    // wrapper decode; `bytes_ratio` is the encoded-message-set size of
-    // a 500-record sample batch relative to uncompressed.
-    val sample = (1 to 500).map { i =>
-      (s"http://news/article/$i".getBytes("UTF-8"),
+    // the wire is real: produce through the DSv2 sink with each
+    // record-batch codec (200 k rows, 4 partitions), consume back
+    // through the batch decode; `bytes_ratio` is the encoded record
+    // batch size of a 500-record sample relative to uncompressed.
+    val sample = (0 until 500).map { i =>
+      KafkaWire.Record(i.toLong, 0L,
+        s"http://news/article/$i".getBytes("UTF-8"),
         ("{\"title\":\"제목 " + i + "\",\"summary\":\"" + pad + "\"}").getBytes("UTF-8"))
     }
-    val plainBytes = KafkaWire.encodeMessageSet(sample, 0L).length.toDouble
+    def batchBytes(codec: Int): Double =
+      KafkaWire.encodeRecordBatch(0L, sample, codec).length.toDouble
+    val plainBytes = batchBytes(KafkaWire.Codec.None)
     val codecResults = Seq("none", "gzip", "snappy", "lz4").map { name =>
-      val codec = KafkaWire.Codec.forName(name)
-      val ratio = if (codec == KafkaWire.Codec.None) 1.0
-        else KafkaWire.encodeMessageSetCompressed(sample, 0L, codec).length /
-          plainBytes
+      val ratio = batchBytes(KafkaWire.Codec.forName(name)) / plainBytes
       val srv = new MiniKafkaServer(numPartitions = 4)
       try {
         val n = 200000

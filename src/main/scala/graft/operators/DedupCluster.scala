@@ -69,7 +69,9 @@ object DedupCluster {
       df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
     var prevSum = labelSum(labels) // also materializes labels + sym cache
     var round = 0
-    var converged = false
+    // no edge → no label: the sum over zero rows is SQL NULL, and an
+    // empty label set is already a fixpoint
+    var converged = prevSum == null
     while (!converged && round < maxRounds) {
       // Min label over self ∪ neighbors, one shuffle on the node key.
       val viaEdges = sym

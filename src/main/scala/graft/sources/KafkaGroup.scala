@@ -489,10 +489,9 @@ object KafkaGroup {
     * semantics cannot diverge between them. */
   private[sources] def drainPartition(dataConn: Conn, topic: String,
       p: Int, start: Long, isolation: Int,
-      onDataLoss: String, leaderEpoch: Int = -1,
-      apisHint: Map[Int, (Int, Int)] = null): (Seq[Record], Long) = {
+      onDataLoss: String, leaderEpoch: Int = -1): (Seq[Record], Long) = {
     val fetcher = new GrowingFetcher(dataConn, topic, p, isolation,
-      currentLeaderEpoch = leaderEpoch, apisHint = apisHint)
+      currentLeaderEpoch = leaderEpoch)
     val out = scala.collection.mutable.ArrayBuffer.empty[Record]
     var off = start
     var done = false
@@ -568,7 +567,7 @@ object KafkaGroup {
         // election) — all of it reroutes, bounded
         route = KafkaWire.leaderRoute(host, port, topic, p)
         return drainPartition(route.conn, topic, p, start, isolation,
-          onDataLoss, leaderEpoch = route.epoch, apisHint = route.apis)
+          onDataLoss, leaderEpoch = route.epoch)
       } catch {
         case e @ (_: KafkaWire.NotLeaderException |
             _: KafkaWire.FencedLeaderEpochException |

@@ -14,19 +14,19 @@ import org.apache.spark.sql.functions._
   * real TCP against an in-JVM broker double — the same pattern that
   * proves the S11 HTTP crawl against an in-JVM HTTP server.
   *
-  * Pre-flexible encodings (INT16-length strings, INT32-length arrays,
-  * no tagged fields) across the full modern surface (r14):
-  *  - BOTH record formats, ApiVersions-negotiated: message v1
-  *    (magic 1, CRC32 per record, compressed wrapper messages) and
-  *    record-batch v2 (magic 2, varint/zigzag records, per-record
+  * One protocol regime, the one Kafka 4.0 keeps (KIP-724 dropped
+  * message formats v0/v1, KIP-896 the old API versions):
+  *  - record-batch v2 only (magic 2, varint/zigzag records, per-record
   *    timestamps + headers, CRC32C over attributes..end, batch-level
-  *    compression) — one decode pass handles a mixed-format log (both
-  *    put magic at entry offset 16); every CRC is VERIFIED on consume
-  *    (corruption throws, never yields rows);
-  *  - APIs: ApiVersions v0 (18), Metadata v0 (3), Produce v2/v3 (0),
-  *    Fetch v2/v4 (1), ListOffsets v1/v2 (2), OffsetCommit v2 (8),
-  *    OffsetFetch v1 (9), InitProducerId v0 (22), AddPartitionsToTxn
-  *    v0 (24), EndTxn v0 (26);
+  *    compression); every CRC is VERIFIED on consume (corruption
+  *    throws, never yields rows);
+  *  - one version per data-path API, sent without an ApiVersions
+  *    handshake: Produce v3 (0), Fetch v9 (1, epoch-pinned; -1 when
+  *    unpinned), ListOffsets v2 (2), Metadata v9 (3, the flexible
+  *    KIP-482 encoding); the rest pre-flexible (INT16-length strings,
+  *    INT32-length arrays): OffsetCommit v2 (8), OffsetFetch v1 (9),
+  *    InitProducerId v0 (22), AddPartitionsToTxn v0 (24), EndTxn v0
+  *    (26), plus the group, replication and ApiVersions calls;
   *  - the idempotent producer (pid/epoch/baseSequence, broker-side
   *    retry dedup) and TRANSACTIONS (control markers, last-stable-
   *    offset pinning, read_committed filtering, zombie fencing);
@@ -173,8 +173,6 @@ object KafkaWire {
         i += 1
       }
     }
-    /** Byte at absolute position `i` without moving the cursor. */
-    def peek(i: Int): Int = buf(i) & 0xff
     def position: Int = p
     def remaining: Int = buf.length - p
   }
@@ -214,35 +212,19 @@ object KafkaWire {
   def partitionFor(key: Array[Byte], numPartitions: Int): Int =
     if (key == null) 0 else (murmur2(key) & 0x7fffffff) % numPartitions
 
-  // ── message format v1 (magic 1, CRC32 over magic..end) ─────────────
+  // ── records and compression codecs ─────────────────────────────────
 
-  /** One consumed record with its broker-assigned absolute offset.
-    * `headers` exist only in record-batch v2 (magic 2) — the v1
-    * codec ignores them on encode (a real broker's down-conversion
-    * drops headers the same way). */
+  /** One consumed record with its broker-assigned absolute offset
+    * and its record-batch v2 headers. */
   final case class Record(offset: Long, timestamp: Long,
       key: Array[Byte], value: Array[Byte],
       headers: Seq[(String, Array[Byte])] = Nil)
 
-  private def encodeMessage(timestamp: Long, key: Array[Byte],
-      value: Array[Byte], attributes: Int = 0): Array[Byte] = {
-    val body = new Writer()
-      .int8(1)            // magic = 1
-      .int8(attributes)   // bits 0-2 codec (0 none, 1 gzip), CreateTime
-      .int64(timestamp)
-      .bytes(key)
-      .bytes(value)
-      .result()
-    val crc = new java.util.zip.CRC32(); crc.update(body)
-    new Writer().int32(crc.getValue.toInt).raw(body).result()
-  }
-
-  /** Message-format v1 compression codecs (attribute bits 0-2), the
+  /** Record-batch compression codecs (attribute bits 0-2), the
     * published constants: 0 none, 1 gzip, 2 snappy, 3 lz4. Snappy is
     * the xerial STREAM framing (SnappyOutputStream — what the stock
     * Java client wraps snappy batches in), lz4 the standard LZ4 FRAME
-    * format (magic 0x184D2204 — v1 fixed the v0 descriptor-checksum
-    * quirk, so the standard frame IS the wire format). */
+    * format (magic 0x184D2204). */
   object Codec {
     val None = 0; val Gzip = 1; val Snappy = 2; val Lz4 = 3
     /** Option-string form (the sink's `codec` option / the stock
@@ -286,104 +268,14 @@ object KafkaWire {
     try in.readAllBytes() finally in.close()
   }
 
-  /** MessageSet v1 with compression: the records are encoded as an
-    * INNER message set with RELATIVE offsets 0..n-1, compressed, and
-    * wrapped in ONE outer message whose attributes carry the codec id
-    * and whose timestamp is the max inner timestamp (the v1 wrapper
-    * convention; the broker assigns the wrapper's offset to the LAST
-    * inner message, and a consumer reconstructs the rest — see
-    * [[decodeMessageSet]]). */
-  def encodeMessageSetCompressed(records: Seq[(Array[Byte], Array[Byte])],
-      timestamp: Long, codec: Int): Array[Byte] = {
-    val inner = encodeMessageSet(records, timestamp)
-    val wrapper =
-      encodeMessage(timestamp, null, compress(codec, inner), attributes = codec)
-    new Writer().int64(0L).int32(wrapper.length).raw(wrapper).result()
-  }
-
-  /** GZIP shorthand, kept for the original S2 call sites. */
-  def encodeMessageSetGzip(records: Seq[(Array[Byte], Array[Byte])],
-      timestamp: Long): Array[Byte] =
-    encodeMessageSetCompressed(records, timestamp, Codec.Gzip)
-
-  /** MessageSet v1: [offset INT64, size INT32, message]*. The producer
-    * writes relative offsets 0..n-1 (the broker assigns absolutes);
-    * the consumer reads the broker's absolutes back. */
-  def encodeMessageSet(records: Seq[(Array[Byte], Array[Byte])],
-      timestamp: Long): Array[Byte] = {
-    val w = new Writer()
-    records.zipWithIndex.foreach { case ((k, v), i) =>
-      val msg = encodeMessage(timestamp, k, v)
-      w.int64(i.toLong).int32(msg.length).raw(msg)
-    }
-    w.result()
-  }
-
-  /** MessageSet v1 with EXPLICIT absolute offsets — the Fetch-response
-    * side of the codec (a broker serves stored records back with the
-    * offsets it assigned at produce time). */
-  def encodeMessageSetAt(records: Seq[Record]): Array[Byte] = {
-    val w = new Writer()
-    records.foreach { rec =>
-      val msg = encodeMessage(rec.timestamp, rec.key, rec.value)
-      w.int64(rec.offset).int32(msg.length).raw(msg)
-    }
-    w.result()
-  }
-
-  /** Decode + CRC-VERIFY a message set; a partial trailing message
-    * (the broker may truncate at max_bytes) is dropped, a CRC mismatch
-    * throws — corruption must never surface as data. */
-  def decodeMessageSet(bytes: Array[Byte]): Seq[Record] = {
-    // toIndexedSeq, NOT toSeq: 2.13's toSeq builds a List, making the
-    // consumers' .length/.last O(n) on every fetch
-    val out = scala.collection.mutable.ArrayBuffer.empty[Record]
-    val r = new Reader(bytes)
-    while (r.remaining >= 12) {
-      val offset = r.int64()
-      val size = r.int32()
-      if (r.remaining < size) return out.toIndexedSeq // truncated tail
-      val msg = r.raw(size)
-      val mr = new Reader(msg)
-      val crc = mr.int32()
-      val check = new java.util.zip.CRC32()
-      check.update(msg, 4, msg.length - 4)
-      if (check.getValue.toInt != crc)
-        throw new java.io.IOException(
-          s"CRC mismatch in message at offset $offset")
-      val magic = mr.int8()
-      require(magic == 1, s"unsupported message magic $magic")
-      val attrs = mr.int8()
-      val ts = mr.int64()
-      val key = mr.bytes(); val value = mr.bytes()
-      (attrs & 0x07) match {
-        case 0 => out += Record(offset, ts, key, value)
-        case codec @ (1 | 2 | 3) =>
-          // compressed wrapper (gzip/snappy/lz4): the value is an
-          // inner message set with RELATIVE offsets 0..n-1, and the
-          // wrapper's offset is the absolute offset of the LAST inner
-          // message (the v1 convention) — reconstruct absolutes as
-          // wrapperOffset - (n-1) + innerOffset.
-          val inner = decodeMessageSet(decompress(codec, value))
-          val base = offset - (inner.length - 1)
-          inner.foreach(r =>
-            out += Record(base + r.offset, r.timestamp, r.key, r.value))
-        case c =>
-          throw new java.io.IOException(s"unsupported compression codec $c")
-      }
-    }
-    out.toIndexedSeq
-  }
-
   // ── record batch v2 (magic 2, varint records, CRC32C) ──────────────
   //
-  // The modern on-wire/on-disk format (Kafka >= 0.11 / message.format
-  // 2, the only one brokers >= 2.1 prefer): one batch header carrying
+  // The on-wire/on-disk format (Kafka >= 0.11 / message.format 2, the
+  // only one Kafka 4.0 keeps): one batch header carrying
   // producerId/epoch/baseSequence (the idempotence fields) + CRC32C
   // over attributes..end, followed by varint-framed records with
   // RELATIVE offsets/timestamps and per-record headers. The records
-  // section (count excluded) is what compression applies to — not a
-  // wrapper-message like v1.
+  // section (count excluded) is what compression applies to.
   //
   // Layout (kafka.apache.org/documentation #recordbatch):
   //   baseOffset int64 | batchLength int32 | partitionLeaderEpoch int32
@@ -396,11 +288,6 @@ object KafkaWire {
   // Record: length varint | attributes int8 | timestampDelta varlong |
   //   offsetDelta varint | keyLen varint (-1 null) | key | valueLen
   //   varint | value | headerCount varint | [keyLen|key|valLen|val]*
-  //
-  // Both formats put the MAGIC byte at entry offset 16 (v1: after
-  // offset+size+crc; v2: after baseOffset+batchLength+leaderEpoch) —
-  // the deliberate design overlap that lets one consumer decode a log
-  // whose segments mix formats. [[decodeRecordSet]] dispatches on it.
 
   /** Batch-header size after the batchLength field, records excluded. */
   private val V2HeaderAfterLength = 49 // epoch 4 + magic 1 + crc 4 + attrs 2 +
@@ -462,8 +349,8 @@ object KafkaWire {
   /** Encode ONE v2 record batch. `records` carry ABSOLUTE offsets
     * (deltas are computed against `baseOffset` — a producer passes
     * baseOffset 0 and offsets 0..n-1, a broker re-serves with its
-    * assigned base) and real per-record timestamps (v2 keeps them;
-    * v1 flattened to the wrapper max). producerId/epoch/baseSequence
+    * assigned base) and real per-record timestamps.
+    * producerId/epoch/baseSequence
     * are the idempotence fields (-1/-1/-1 = not idempotent). */
   def encodeRecordBatch(baseOffset: Long, records: Seq[Record],
       codec: Int = Codec.None, producerId: Long = -1L,
@@ -614,13 +501,9 @@ object KafkaWire {
     out.toIndexedSeq
   }
 
-  /** Client-side decode of a fetched record set of EITHER format —
-    * v1 [offset|size|message] entries and v2 record batches may
-    * coexist in one response (a log written across a format upgrade,
-    * or a broker serving old segments to a new fetcher). Dispatches
-    * on the magic byte, which both formats place at entry offset 16.
-    * CRC-verified per entry (CRC32 for v1, CRC32C for v2); a partial
-    * trailing entry is dropped (grow-and-retry recovers it).
+  /** Client-side decode of a fetched record set: every batch is
+    * CRC32C-verified (corruption throws, never yields rows) and a
+    * partial trailing batch is dropped (grow-and-retry recovers it).
     *
     * Transaction semantics (the consumer side of the published
     * contract): CONTROL batches (commit/abort markers) are never
@@ -632,11 +515,11 @@ object KafkaWire {
     * marker passes — the stock consumer's streaming filter.
     *
     * Returns (records, nextPos): nextPos is the offset AFTER the last
-    * COMPLETE entry — the cursor a reader must advance to even when
+    * COMPLETE batch — the cursor a reader must advance to even when
     * every record in the response was a marker or aborted (else a
     * markers-only range would read as "nothing served" and grow
-    * forever). -1 when no complete entry decoded. */
-  def decodeRecordSetDetailed(bytes: Array[Byte],
+    * forever). -1 when no complete batch decoded. */
+  def decodeRecordSet(bytes: Array[Byte],
       aborted: Seq[(Long, Long)] = Nil): (Seq[Record], Long) = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Record]
     val pendingAborts = scala.collection.mutable.PriorityQueue.empty[(Long, Long)](
@@ -644,58 +527,22 @@ object KafkaWire {
     aborted.foreach { case (pid, first) => pendingAborts.enqueue((pid, first)) }
     val abortedPids = scala.collection.mutable.Set.empty[Long]
     var nextPos = -1L
-    val r = new Reader(bytes)
-    var done = false
-    while (!done && r.remaining >= 17) {
-      val magic = r.peek(r.position + 16)
-      if (magic >= 2) {
-        decodeOneBatchV2(r) match {
-          case Some(b) =>
-            while (pendingAborts.nonEmpty &&
-                pendingAborts.head._2 <= b.baseOffset) {
-              abortedPids += pendingAborts.dequeue()._1
-            }
-            if (b.control) {
-              // marker: type 1 = commit, 0 = abort — either way the
-              // producer's current transaction is resolved
-              abortedPids -= b.producerId
-            } else if (!(b.transactional && abortedPids(b.producerId))) {
-              out ++= b.records
-            }
-            nextPos = b.endOffset
-          case None => done = true
-        }
-      } else {
-        // one v1/v0 entry: [offset int64 | size int32 | message]; lean
-        // on the existing v1 decoder for the message-level logic
-        // (CRC32 check, wrapper decompression, relative offsets)
-        val start = r.position
-        val outerOffset = r.int64()
-        val size = r.int32()
-        if (r.remaining < size) done = true
-        else {
-          r.raw(size)
-          val recs = decodeMessageSet(
-            java.util.Arrays.copyOfRange(bytes, start, start + 12 + size))
-          out ++= recs
-          // a COMPLETE entry always advances the cursor, records or not:
-          // a wrapper whose inner set decoded empty still consumed its
-          // offset slot (the v1 convention stamps the wrapper with the
-          // LAST inner absolute, so +1 is the next slot either way) —
-          // without this a complete-but-empty entry would be mistaken
-          // for an over-max_bytes truncation and grow the fetch window
-          // forever instead of advancing (format-independent cursor
-          // invariant, same as the v2 branch's endOffset)
-          nextPos =
-            if (recs.nonEmpty) recs.last.offset + 1 else outerOffset + 1
-        }
+    decodeRecordBatches(bytes).foreach { b =>
+      while (pendingAborts.nonEmpty &&
+          pendingAborts.head._2 <= b.baseOffset) {
+        abortedPids += pendingAborts.dequeue()._1
       }
+      if (b.control) {
+        // marker: type 1 = commit, 0 = abort — either way the
+        // producer's current transaction is resolved
+        abortedPids -= b.producerId
+      } else if (!(b.transactional && abortedPids(b.producerId))) {
+        out ++= b.records
+      }
+      nextPos = b.endOffset
     }
     (out.toIndexedSeq, nextPos)
   }
-
-  def decodeRecordSet(bytes: Array[Byte]): Seq[Record] =
-    decodeRecordSetDetailed(bytes)._1
 
   // ── framed request/response over TCP ────────────────────────────────
 
@@ -789,9 +636,9 @@ object KafkaWire {
     (err, apis)
   }
 
-  /** One topic's cluster view (Metadata v0): every broker's address
-    * and each partition's LEADER — what a client routes the data path
-    * by on a multi-broker cluster. */
+  /** One topic's cluster view (Metadata v9): every broker's address,
+    * each partition's LEADER and leader epoch, and its ISR — what a
+    * client routes the data path by on a multi-broker cluster. */
   final case class ClusterView(brokers: Map[Int, (String, Int)],
       leaders: Map[Int, Int],
       epochs: Map[Int, Int] = Map.empty,
@@ -815,81 +662,17 @@ object KafkaWire {
         throw new NotLeaderException(topic, partition))
     }
     /** The partition's leader epoch per this view, or -1 when the
-      * view came from a pre-epoch Metadata version (v0): -1 opts the
-      * fetch out of epoch fencing, the pre-KIP-320 behavior. */
+      * view has no row for it: -1 opts the fetch out of epoch
+      * fencing. */
     def epochOf(partition: Int): Int = epochs.getOrElse(partition, -1)
   }
 
-  def clusterMetadata(c: Conn, topic: String): ClusterView = {
-    val body = new Writer().int32(1).str(topic).result()
-    val r = c.call(3, 0, body)
-    val nBrokers = r.int32()
-    val brokers = (0 until nBrokers).map { _ =>
-      val id = r.int32(); val host = r.str(); val port = r.int32()
-      id -> (host, port)
-    }.toMap
-    val nTopics = r.int32()
-    require(nTopics == 1, s"expected 1 topic, got $nTopics")
-    val err = r.int16(); require(err == 0, s"metadata error $err")
-    val name = r.str(); require(name == topic)
-    val nParts = r.int32()
-    val leaders = (0 until nParts).map { _ =>
-      r.int16() // partition error
-      val p = r.int32(); val leader = r.int32()
-      val nr = r.int32(); (0 until nr).foreach(_ => r.int32())
-      val ni = r.int32(); (0 until ni).foreach(_ => r.int32())
-      p -> leader
-    }.toMap
-    ClusterView(brokers, leaders, topic = topic)
-  }
-
-  /** Metadata v7 — the epoch-carrying cluster view (KIP-320): each
-    * partition's leader AND its leader_epoch, which an epoch-aware
-    * consumer pins its fetches to. Falls back structurally to the v0
-    * shape ([[ClusterView]] with `epochs` filled). */
-  def clusterMetadataV7(c: Conn, topic: String): ClusterView = {
-    val body = new Writer().int32(1).str(topic)
-      .int8(1) // allow_auto_topic_creation
-      .result()
-    val r = c.call(3, 7, body)
-    r.int32() // throttle_time_ms
-    val nBrokers = r.int32()
-    val brokers = (0 until nBrokers).map { _ =>
-      val id = r.int32(); val host = r.str(); val port = r.int32()
-      r.str() // rack
-      id -> (host, port)
-    }.toMap
-    r.str()   // cluster_id
-    r.int32() // controller_id
-    val nTopics = r.int32()
-    require(nTopics == 1, s"expected 1 topic, got $nTopics")
-    val err = r.int16(); require(err == 0, s"metadata error $err")
-    val name = r.str(); require(name == topic)
-    r.int8() // is_internal
-    val nParts = r.int32()
-    val rows = (0 until nParts).map { _ =>
-      r.int16() // partition error
-      val p = r.int32(); val leader = r.int32()
-      val epoch = r.int32() // leader_epoch (v7+)
-      val nr = r.int32(); (0 until nr).foreach(_ => r.int32())
-      val ni = r.int32()
-      val isr = (0 until ni).map(_ => r.int32())
-      val no = r.int32(); (0 until no).foreach(_ => r.int32()) // offline
-      (p, leader, epoch, isr)
-    }
-    ClusterView(brokers,
-      rows.map(t => t._1 -> t._2).toMap,
-      rows.map(t => t._1 -> t._3).toMap,
-      rows.map(t => t._1 -> (t._4: Seq[Int])).toMap,
-      topic = topic)
-  }
-
-  /** Metadata v9 — the FLEXIBLE encoding of the v7 view (KIP-482):
+  /** Metadata v9 for one topic, the flexible encoding (KIP-482):
     * compact strings/arrays and tagged fields throughout, request
-    * header v2, response header v1. Field-for-field the same cluster
-    * view as [[clusterMetadataV7]] (plus the v8 authorized-operations
-    * ints), so a negotiating client can take either generation. */
-  def clusterMetadataV9(c: Conn, topic: String): ClusterView = {
+    * header v2, response header v1. Each partition row carries its
+    * leader_epoch (KIP-320), which an epoch-aware consumer pins its
+    * fetches to. */
+  def clusterMetadata(c: Conn, topic: String): ClusterView = {
     val body = new Writer()
       .compactArrayLen(1).compactStr(topic).tagsEmpty() // topics[{name}]
       .int8(1) // allow_auto_topic_creation
@@ -935,36 +718,7 @@ object KafkaWire {
       topic = topic)
   }
 
-  /** The best cluster view the broker serves: flexible Metadata v9
-    * when advertised, the epoch-carrying v7 below that, else v0
-    * (epochs absent → fetches un-pinned, the pre-KIP-320
-    * degradation). ONE ApiVersions round trip: the v0 response
-    * already carries the whole (api → max version) table this choice
-    * needs — re-handshaking at v3 would buy nothing and double the
-    * negotiation latency on every refresh (and fencing recovery
-    * refreshes on every FENCED_LEADER_EPOCH). The v3 encoding itself
-    * is exercised by [[apiVersionsV3]]'s own callers and specs. */
-  def bestClusterMetadata(c: Conn, topic: String): ClusterView =
-    viewAndApis(c, topic)._1
-
-  /** The ONE copy of the negotiate-then-pick chain: ApiVersions, then
-    * the best Metadata version the broker serves (flexible v9 →
-    * epoch-carrying v7 → v0). Returns the view AND the api table (for
-    * callers that pass it on as [[GrowingFetcher]]'s handshake hint);
-    * the table is null when the ApiVersions round errored. */
-  private def viewAndApis(c: Conn,
-      topic: String): (ClusterView, Map[Int, (Int, Int)]) = {
-    val (err, apis) = apiVersions(c)
-    val view =
-      if (err == 0 && apis.get(3).exists(_._2 >= 9))
-        clusterMetadataV9(c, topic)
-      else if (err == 0 && apis.get(3).exists(_._2 >= 7))
-        clusterMetadataV7(c, topic)
-      else clusterMetadata(c, topic)
-    (view, if (err == 0) apis else null)
-  }
-
-  /** Metadata v0 for one topic: number of partitions. */
+  /** One topic's number of partitions. */
   def partitionCount(c: Conn, topic: String): Int =
     clusterMetadata(c, topic).partitions
 
@@ -982,18 +736,12 @@ object KafkaWire {
     else { boot.close(); new Conn(h, p) }
   }
 
-  /** A leader-routed data connection PLUS the routing round's other
-    * products: the partition's LEADER EPOCH (KIP-320 — the consumer
-    * pins its fetches to the epoch it routed by, so a re-election it
+  /** A leader-routed data connection PLUS the partition's LEADER
+    * EPOCH from the same metadata round (KIP-320 — the consumer pins
+    * its fetches to the epoch it routed by, so a re-election it
     * hasn't seen answers FENCED_LEADER_EPOCH instead of silently
-    * serving from a stale view; -1 against a pre-epoch broker) and
-    * the negotiated api table, which [[GrowingFetcher]] accepts as a
-    * hint so the data path costs the same two round trips the
-    * un-pinned path did (the stock client caches ApiVersions per
-    * node; the double's brokers are version-uniform, so the
-    * bootstrap's table stands in for the leader's). */
-  final case class LeaderRoute(conn: Conn, epoch: Int,
-      apis: Map[Int, (Int, Int)])
+    * serving from a stale view). */
+  final case class LeaderRoute(conn: Conn, epoch: Int)
 
   def leaderRoute(bootstrapHost: String, bootstrapPort: Int,
       topic: String, partition: Int): LeaderRoute = {
@@ -1003,55 +751,17 @@ object KafkaWire {
     // address for its (dead) leader — the lookup must not leak the
     // bootstrap socket (reroute loops retry this path repeatedly
     // during an offline window)
-    val (h, p, epoch, apis) =
+    val (h, p, epoch) =
       try {
-        val (view, table) = viewAndApis(boot, topic)
+        val view = clusterMetadata(boot, topic)
         val (h0, p0) = view.leaderAddr(partition)
-        (h0, p0, view.epochOf(partition), table)
+        (h0, p0, view.epochOf(partition))
       } catch { case e: Throwable => boot.close(); throw e }
-    if (h == bootstrapHost && p == bootstrapPort)
-      LeaderRoute(boot, epoch, apis)
-    else { boot.close(); LeaderRoute(new Conn(h, p), epoch, apis) }
+    if (h == bootstrapHost && p == bootstrapPort) LeaderRoute(boot, epoch)
+    else { boot.close(); LeaderRoute(new Conn(h, p), epoch) }
   }
 
-  /** Produce v2 (acks=-1): one partition's records; returns the
-    * broker-assigned base offset. A non-None `codec` sends the batch
-    * as ONE compressed wrapper message (gzip/snappy/lz4, the v1
-    * attribute bits) — the broker double, like a real broker
-    * validating recompressed batches, decompresses through the same
-    * [[decodeMessageSet]]. */
-  def produce(c: Conn, topic: String, partition: Int,
-      records: Seq[(Array[Byte], Array[Byte])], timestamp: Long,
-      codec: Int = Codec.None, acks: Int = -1): Long = {
-    val set = if (codec != Codec.None)
-      encodeMessageSetCompressed(records, timestamp, codec)
-      else encodeMessageSet(records, timestamp)
-    val body = new Writer()
-      .int16(acks).int32(30000) // acks (-1 = all ISR, 1 = leader only)
-      .int32(1).str(topic)
-      .int32(1).int32(partition)
-      .int32(set.length).raw(set)
-      .result()
-    val r = c.call(0, 2, body)
-    val nTopics = r.int32(); require(nTopics == 1)
-    r.str()
-    val nParts = r.int32(); require(nParts == 1)
-    r.int32() // partition
-    val err = r.int16()
-    if (err == Errors.NotLeaderForPartition)
-      throw new NotLeaderException(topic, partition)
-    if (err == Errors.NotEnoughReplicas)
-      throw new NotEnoughReplicasException(topic, partition)
-    if (err == Errors.NotEnoughReplicasAfterAppend)
-      throw new NotEnoughReplicasAfterAppendException(topic, partition)
-    require(err == 0, s"produce error $err")
-    val baseOffset = r.int64()
-    r.int64() // log_append_time
-    r.int32() // throttle_time_ms
-    baseOffset
-  }
-
-  // ── the modern (v2-format) protocol calls ──────────────────────────
+  // ── data-path protocol calls ────────────────────────────────────────
 
   /** Error codes the idempotent-produce path can see (public
     * protocol constants). */
@@ -1229,82 +939,69 @@ object KafkaWire {
     }
   }
 
-  /** Fetch v4 with the full transactional read contract:
-    * (records, watermark, nextPos). The watermark is the high
-    * watermark under read_uncommitted and the LAST STABLE OFFSET under
-    * read_committed (the published consumer contract — an open
-    * transaction blocks committed readers). nextPos is the cursor
-    * after the last complete entry (control markers and aborted
-    * batches advance it without yielding records). The response may
-    * carry EITHER record format — old segments are served as-stored. */
-  def fetchV4Detailed(c: Conn, topic: String, partition: Int, offset: Long,
+  /** Fetch v9 (api 1), the one fetch version this client sends, with
+    * the full transactional read contract: (records, watermark,
+    * nextPos). The watermark is the high watermark under
+    * read_uncommitted and the LAST STABLE OFFSET under read_committed
+    * (the published consumer contract — an open transaction blocks
+    * committed readers). nextPos is the cursor after the last complete
+    * batch (control markers and aborted batches advance it without
+    * yielding records). The request is epoch-PINNED (KIP-320): it
+    * carries the leader epoch the client's metadata named, and a
+    * broker whose partition has moved on answers FENCED_LEADER_EPOCH
+    * instead of data — stale metadata is detected by the protocol
+    * itself, not by luck. `currentLeaderEpoch` -1 opts out. */
+  def fetch(c: Conn, topic: String, partition: Int, offset: Long,
       maxBytes: Int = 1 << 20,
-      isolation: Int = Isolation.ReadUncommitted): (Seq[Record], Long, Long) = {
-    val body = new Writer()
-      .int32(-1).int32(100).int32(0) // replica=-1, max_wait, min_bytes
-      .int32(maxBytes)               // response max_bytes (v3+)
-      .int8(isolation)
-      .int32(1).str(topic)
-      .int32(1).int32(partition).int64(offset).int32(maxBytes)
-      .result()
-    val r = c.call(1, 4, body)
-    r.int32() // throttle_time_ms
-    val nTopics = r.int32(); require(nTopics == 1)
-    r.str()
-    val nParts = r.int32(); require(nParts == 1)
-    r.int32() // partition
-    val err = r.int16()
-    if (err == Errors.OffsetOutOfRange)
-      throw new OffsetOutOfRangeException(topic, partition, offset)
-    if (err == Errors.NotLeaderForPartition)
-      throw new NotLeaderException(topic, partition)
-    require(err == 0, s"fetch error $err")
-    val hw = r.int64()
-    val lso = r.int64() // last_stable_offset (v4+)
-    val nAborted = r.int32() // aborted_transactions (v4+)
-    val aborted = (0 until math.max(0, nAborted)).map { _ =>
-      (r.int64(), r.int64()) // (producer_id, first_offset)
-    }
-    val set = r.bytes()
-    val watermark = if (isolation == Isolation.ReadCommitted) lso else hw
+      isolation: Int = Isolation.ReadUncommitted,
+      currentLeaderEpoch: Int = -1): (Seq[Record], Long, Long) = {
+    val (set, hw, lso, aborted) = fetchCall(c, topic, partition, offset,
+      maxBytes, isolation, currentLeaderEpoch, replicaId = -1,
+      logStartOffset = -1L)
+    val committed = isolation == Isolation.ReadCommitted
+    val watermark = if (committed) lso else hw
     if (set == null) (Seq.empty, watermark, -1L)
     else {
-      val (recs, nextPos) = decodeRecordSetDetailed(set,
-        if (isolation == Isolation.ReadCommitted) aborted else Nil)
+      val (recs, nextPos) = decodeRecordSet(set, if (committed) aborted else Nil)
       (recs, watermark, nextPos)
     }
   }
 
-  /** Compatibility shape: (records, highWatermark). */
-  def fetchV4(c: Conn, topic: String, partition: Int, offset: Long,
-      maxBytes: Int = 1 << 20): (Seq[Record], Long) = {
-    val (recs, hw, _) = fetchV4Detailed(c, topic, partition, offset, maxBytes)
-    (recs, hw)
+  /** The REPLICA fetcher's fetch (replica_id >= 0): returns the raw
+    * record-set bytes plus the leader's advertised HIGH WATERMARK —
+    * the follower appends the leader's batches VERBATIM
+    * (broker-assigned offsets, epoch stamps, producer state intact),
+    * never re-encoded, and records the HW so a later promotion serves
+    * consumers from it instead of 0. (bytes may be null/empty when
+    * caught up.) */
+  def replicaFetch(c: Conn, topic: String, partition: Int, offset: Long,
+      replicaId: Int, currentLeaderEpoch: Int,
+      logStartOffset: Long = 0L,
+      maxBytes: Int = 1 << 20): (Array[Byte], Long) = {
+    val (set, hw, _, _) = fetchCall(c, topic, partition, offset, maxBytes,
+      Isolation.ReadUncommitted, currentLeaderEpoch, replicaId,
+      logStartOffset)
+    (set, hw)
   }
 
-  /** Fetch v9 — the epoch-PINNED fetch (KIP-320): the request carries
-    * the leader epoch the client's metadata named, and a broker whose
-    * partition has moved on answers FENCED_LEADER_EPOCH instead of
-    * data — stale metadata is detected by the protocol itself, not by
-    * luck. `currentLeaderEpoch` -1 opts out (pre-KIP-320 behavior).
-    * Sessionless (session_id 0 / epoch -1, the protocol's full-fetch
-    * degenerate case). Same return shape as [[fetchV4Detailed]]. */
-  def fetchV9Detailed(c: Conn, topic: String, partition: Int, offset: Long,
-      maxBytes: Int = 1 << 20,
-      isolation: Int = Isolation.ReadUncommitted,
-      currentLeaderEpoch: Int = -1,
-      replicaId: Int = -1,
-      logStartOffset: Long = -1L): (Seq[Record], Long, Long) = {
+  /** One Fetch v9 round trip for one partition, sessionless
+    * (session_id 0 / epoch -1, the protocol's full-fetch degenerate
+    * case): (record-set bytes, high watermark, last stable offset,
+    * aborted (producerId, firstOffset) ranges). */
+  private def fetchCall(c: Conn, topic: String, partition: Int,
+      offset: Long, maxBytes: Int, isolation: Int, currentLeaderEpoch: Int,
+      replicaId: Int, logStartOffset: Long)
+      : (Array[Byte], Long, Long, Seq[(Long, Long)]) = {
     val body = new Writer()
       .int32(replicaId).int32(100).int32(0) // replica, max_wait, min_bytes
-      .int32(maxBytes)               // response max_bytes (v3+)
+      .int32(maxBytes)               // response max_bytes
       .int8(isolation)
       .int32(0).int32(-1)            // session_id, session_epoch (sessionless)
       .int32(1).str(topic)
       .int32(1).int32(partition)
-      .int32(currentLeaderEpoch)     // the fencing pin (v9+)
+      .int32(currentLeaderEpoch)     // the fencing pin
       .int64(offset)
-      .int64(logStartOffset)         // follower's log start (v5+)
+      .int64(logStartOffset)         // follower's log start
       .int32(maxBytes)
       .int32(0)                      // forgotten_topics_data
       .result()
@@ -1330,20 +1027,13 @@ object KafkaWire {
       case other => sys.error(s"fetch error $other")
     }
     val hw = r.int64()
-    val lso = r.int64()       // last_stable_offset (v4+)
-    r.int64()                 // log_start_offset (v5+)
-    val nAborted = r.int32()  // aborted_transactions (v4+)
+    val lso = r.int64()       // last_stable_offset
+    r.int64()                 // log_start_offset
+    val nAborted = r.int32()  // aborted_transactions
     val aborted = (0 until math.max(0, nAborted)).map { _ =>
-      (r.int64(), r.int64())
+      (r.int64(), r.int64()) // (producer_id, first_offset)
     }
-    val set = r.bytes()
-    val watermark = if (isolation == Isolation.ReadCommitted) lso else hw
-    if (set == null) (Seq.empty, watermark, -1L)
-    else {
-      val (recs, nextPos) = decodeRecordSetDetailed(set,
-        if (isolation == Isolation.ReadCommitted) aborted else Nil)
-      (recs, watermark, nextPos)
-    }
+    (r.bytes(), hw, lso, aborted)
   }
 
   /** OffsetsForLeaderEpoch v2 (api 23) for one partition: the
@@ -1409,60 +1099,6 @@ object KafkaWire {
       val topic = r.str(); val p = r.int32(); val e = r.int16()
       (topic, p) -> e
     }.toMap
-  }
-
-  /** The REPLICA fetcher's fetch (v9, replica_id >= 0): returns the
-    * raw record-set bytes plus the leader's advertised HIGH WATERMARK
-    * — the follower appends the leader's batches VERBATIM
-    * (broker-assigned offsets, epoch stamps, producer state intact),
-    * never re-encoded, and records the HW so a later promotion serves
-    * consumers from it instead of 0 (the response has always carried
-    * it; it was previously discarded). (bytes may be null/empty when
-    * caught up.) */
-  def fetchV9Raw(c: Conn, topic: String, partition: Int, offset: Long,
-      replicaId: Int, currentLeaderEpoch: Int,
-      logStartOffset: Long = 0L,
-      maxBytes: Int = 1 << 20): (Array[Byte], Long) = {
-    val body = new Writer()
-      .int32(replicaId).int32(100).int32(0)
-      .int32(maxBytes)
-      .int8(0) // replicas read uncommitted, always
-      .int32(0).int32(-1)
-      .int32(1).str(topic)
-      .int32(1).int32(partition)
-      .int32(currentLeaderEpoch)
-      .int64(offset)
-      .int64(logStartOffset)
-      .int32(maxBytes)
-      .int32(0)
-      .result()
-    val r = c.call(1, 9, body)
-    r.int32() // throttle
-    val topErr = r.int16(); require(topErr == 0, s"fetch error $topErr")
-    r.int32() // session_id
-    val nTopics = r.int32(); require(nTopics == 1)
-    r.str()
-    val nParts = r.int32(); require(nParts == 1)
-    r.int32() // partition
-    val err = r.int16()
-    err match {
-      case 0 =>
-      case Errors.OffsetOutOfRange =>
-        throw new OffsetOutOfRangeException(topic, partition, offset)
-      case Errors.NotLeaderForPartition =>
-        throw new NotLeaderException(topic, partition)
-      case Errors.FencedLeaderEpoch =>
-        throw new FencedLeaderEpochException(topic, partition)
-      case Errors.UnknownLeaderEpoch =>
-        throw new UnknownLeaderEpochException(topic, partition)
-      case other => sys.error(s"fetch error $other")
-    }
-    val hw = r.int64()
-    r.int64() // lso
-    r.int64() // log_start_offset
-    val nAborted = r.int32()
-    (0 until math.max(0, nAborted)).foreach { _ => r.int64(); r.int64() }
-    (r.bytes(), hw)
   }
 
   /** AddPartitionsToTxn v0: declare the partitions the current
@@ -1683,38 +1319,26 @@ object KafkaWire {
     }.toMap
   }
 
-  /** Highest mutually-supported record format: 2 when the broker
-    * advertises Produce >= 3 AND Fetch >= 4 (the versions that carry
-    * v2 batches), else 1 — the stock client's
-    * ApiVersions-then-downgrade handshake, collapsed to the one axis
-    * this client varies. */
-  def negotiateFormat(c: Conn): Int = {
-    val (err, apis) = apiVersions(c)
-    if (err == 0 && apis.get(0).exists(_._2 >= 3) &&
-      apis.get(1).exists(_._2 >= 4)) 2
-    else 1
-  }
-
-  /** ListOffsets v1: the log-end (timestamp = -1, "latest") or
+  /** ListOffsets v2: the log-end (timestamp = -1, "latest") or
     * log-start (-2, "earliest") offset of one partition — how a
     * consumer resolves its admission window without fetching data.
-    * With `isolation` = read_committed the call upgrades to
-    * ListOffsets v2 (the version that added isolation_level) and
-    * "latest" resolves to the LAST STABLE OFFSET — a committed
-    * reader's admission window must stop before open transactions.
+    * With `isolation` = read_committed "latest" resolves to the LAST
+    * STABLE OFFSET — a committed reader's admission window must stop
+    * before open transactions.
     * A REAL timestamp with no record at/after it returns -1 (the
     * protocol's "no such offset") — the CALLER's
     * startingOffsetsByTimestampStrategy decides what that means. */
   def listOffset(c: Conn, topic: String, partition: Int,
       timestamp: Long = -1L,
       isolation: Int = Isolation.ReadUncommitted): Long = {
-    val committed = isolation == Isolation.ReadCommitted
-    val w = new Writer().int32(-1) // replica_id
-    if (committed) w.int8(isolation)
-    w.int32(1).str(topic)
+    val body = new Writer()
+      .int32(-1) // replica_id
+      .int8(isolation)
+      .int32(1).str(topic)
       .int32(1).int32(partition).int64(timestamp)
-    val r = c.call(2, if (committed) 2 else 1, w.result())
-    if (committed) r.int32() // throttle_time_ms (v2+)
+      .result()
+    val r = c.call(2, 2, body)
+    r.int32() // throttle_time_ms
     val nTopics = r.int32(); require(nTopics == 1)
     r.str()
     val nParts = r.int32(); require(nParts == 1)
@@ -1752,82 +1376,22 @@ object KafkaWire {
     * fails loudly instead of silently skipping the offset range. */
   val MaxFetchBytes: Int = 1 << 26
 
-  /** Fetch v2 from `offset`: (records, highWatermark). */
-  def fetch(c: Conn, topic: String, partition: Int, offset: Long,
-      maxBytes: Int = 1 << 20): (Seq[Record], Long) = {
-    val (recs, hw, _) = fetchV2WithSize(c, topic, partition, offset, maxBytes)
-    (recs, hw)
-  }
-
-  /** Fetch v2 plus the WIRE SIZE of the served record set — the signal
-    * that disambiguates "zero records decoded": 0 bytes below the high
-    * watermark means the span had no v1 representation at all
-    * (down-converted control markers leave an offset GAP — the old-
-    * consumer contract), where a NON-empty undecodable set is a
-    * message sliced at max_bytes (grow and retry). */
-  private def fetchV2WithSize(c: Conn, topic: String, partition: Int,
-      offset: Long, maxBytes: Int): (Seq[Record], Long, Int) = {
-    val body = new Writer()
-      .int32(-1).int32(100).int32(0) // replica=-1, max_wait, min_bytes
-      .int32(1).str(topic)
-      .int32(1).int32(partition).int64(offset).int32(maxBytes)
-      .result()
-    val r = c.call(1, 2, body)
-    r.int32() // throttle_time_ms
-    val nTopics = r.int32(); require(nTopics == 1)
-    r.str()
-    val nParts = r.int32(); require(nParts == 1)
-    r.int32() // partition
-    val err = r.int16()
-    if (err == Errors.OffsetOutOfRange)
-      throw new OffsetOutOfRangeException(topic, partition, offset)
-    if (err == Errors.NotLeaderForPartition)
-      throw new NotLeaderException(topic, partition)
-    require(err == 0, s"fetch error $err")
-    val hw = r.int64()
-    val set = r.bytes()
-    (if (set == null) Seq.empty else decodeMessageSet(set), hw,
-      if (set == null) 0 else set.length)
-  }
-
   /** ONE grow-on-truncation fetch cursor, shared by both consume paths
     * (the DSv2 range reader and [[pollOnce]]'s loop) so the recovery
     * algorithm cannot diverge between them. `fetchAt(pos)` returns
-    * (records with offset >= pos, highWatermark): a compressed wrapper
-    * batch containing `pos` decompresses to below-cursor records —
-    * dropped here, they belong to an earlier range — and a fetch that
-    * yields ZERO complete records while pos < hw means a single
-    * message exceeded maxBytes (the broker slices at max_bytes), so
-    * the window doubles and retries; past [[MaxFetchBytes]] it fails
-    * LOUDLY (the stock consumer's RecordTooLargeException) instead of
-    * silently skipping a committed range. */
+    * (records with offset >= pos, watermark): a record batch
+    * containing `pos` is served whole, so it decodes to below-cursor
+    * records — dropped here, they belong to an earlier range — and a
+    * fetch that yields ZERO complete records while pos < watermark
+    * means a single batch exceeded maxBytes (the broker slices at
+    * max_bytes), so the window doubles and retries; past
+    * [[MaxFetchBytes]] it fails LOUDLY (the stock consumer's
+    * RecordTooLargeException) instead of silently skipping a
+    * committed range. */
   final class GrowingFetcher(c: Conn, topic: String, partition: Int,
       isolation: Int = Isolation.ReadUncommitted,
-      currentLeaderEpoch: Int = -1,
-      apisHint: Map[Int, (Int, Int)] = null) {
+      currentLeaderEpoch: Int = -1) {
     private var maxBytes = 1 << 20
-    // one ApiVersions round-trip per task connection (the stock
-    // client's handshake), skipped when the caller already holds the
-    // table from its routing round ([[leaderRoute]]): Fetch v9 when
-    // the broker fences by leader epoch (KIP-320), v4 when it serves
-    // v2 batches, v2 otherwise — decode handles either record format
-    // per entry
-    private val (format, fetchEpochAware) = {
-      val apisOpt =
-        if (apisHint != null) Some(apisHint)
-        else {
-          val (err, apis) = apiVersions(c)
-          if (err == 0) Some(apis) else None
-        }
-      val fmt =
-        if (apisOpt.exists(a => a.get(0).exists(_._2 >= 3) &&
-          a.get(1).exists(_._2 >= 4))) 2
-        else 1
-      (fmt, apisOpt.exists(_.get(1).exists(_._2 >= 9)))
-    }
-    require(isolation == Isolation.ReadUncommitted || format >= 2,
-      "read_committed needs a record-batch-v2 broker (Fetch v4 carries " +
-        "the last-stable-offset/aborted-transactions contract)")
     def fetchAt(pos: Long): (Seq[Record], Long) = {
       // the internal cursor may run AHEAD of pos: control markers and
       // aborted transactions occupy offset slots but yield no records,
@@ -1835,28 +1399,8 @@ object KafkaWire {
       // be mistaken for an over-max_bytes truncation
       var p = pos
       while (true) {
-        val (recs, wm, nextPos) =
-          if (fetchEpochAware)
-            fetchV9Detailed(c, topic, partition, p, maxBytes, isolation,
-              currentLeaderEpoch)
-          else if (format >= 2)
-            fetchV4Detailed(c, topic, partition, p, maxBytes, isolation)
-          else {
-            val (rs, hw, setLen) =
-              fetchV2WithSize(c, topic, partition, p, maxBytes)
-            // zero records + ZERO served bytes below the watermark: the
-            // span has no v1 form (a down-converted control marker's
-            // offset gap) — advance one slot, the marker's exact width;
-            // zero records + nonempty bytes stays -1 (a sliced message:
-            // grow). Keeps the cursor invariant format-independent even
-            // though today's v1-negotiated brokers cannot host
-            // transactions.
-            val np =
-              if (rs.nonEmpty) rs.last.offset + 1
-              else if (setLen == 0 && p < hw) p + 1
-              else -1L
-            (rs, hw, np)
-          }
+        val (recs, wm, nextPos) = fetch(c, topic, partition, p, maxBytes,
+          isolation, currentLeaderEpoch)
         val kept = recs.filter(_.offset >= pos)
         if (kept.nonEmpty || p >= wm) return (kept, wm)
         if (nextPos > p) p = nextPos // skipped markers/aborted: advance
@@ -1881,13 +1425,9 @@ object KafkaWire {
     * mismatch) are NOT retried — a broker that mis-routes responses
     * must abort the task, not be trusted with a resend. */
   final class RetryingProducer(host: String, port: Int, topic: String,
-      maxAttempts: Int = 3, format: String = "auto",
+      maxAttempts: Int = 3,
       idempotent: Boolean = false, transactionalId: String = null,
       acks: String = "all") {
-    require(format == "auto" || format == "v1" || format == "v2",
-      s"format must be auto|v1|v2, got '$format'")
-    require(!(idempotent && format == "v1"),
-      "idempotent produce needs record-batch v2 (format=v1 given)")
     /** acks="all" (-1): the broker acks only once every in-sync
       * replica persisted the batch — an acked record survives a clean
       * leader failover. acks="1": leader-only ack — faster, but a
@@ -1900,7 +1440,6 @@ object KafkaWire {
     private val acksCode = if (acks == "all") -1 else 1
     private var conn: Conn = null
     private var nParts = -1
-    private var magic = -1
     // ── multi-broker routing: the data path goes to each partition's
     // LEADER (discovered via metadata); control calls (InitProducerId,
     // AddPartitionsToTxn, EndTxn, metadata itself) ride the bootstrap
@@ -1941,17 +1480,6 @@ object KafkaWire {
     private def ensure(): Unit = if (conn == null) {
       conn = new Conn(host, port)
       nParts = partitionCount(conn, topic)
-      val negotiated = negotiateFormat(conn)
-      magic = format match {
-        case "v1" => 1
-        case "v2" =>
-          require(negotiated >= 2, "broker does not support record-batch v2")
-          2
-        case _ =>
-          if (idempotent) require(negotiated >= 2,
-            "idempotent produce needs a record-batch-v2 broker")
-          negotiated
-      }
       if (idempotent && pid < 0L) {
         val (p, e) = initProducerId(conn, transactionalId)
         pid = p; pEpoch = e
@@ -1963,8 +1491,6 @@ object KafkaWire {
       dropView()
     }
     def partitions: Int = { ensure(); nParts }
-    /** The negotiated record format (1 or 2) — observable for tests. */
-    def recordFormat: Int = { ensure(); magic }
     def producerIdentity: (Long, Int) = { ensure(); (pid, pEpoch) }
 
     // ── transactions (exactly-once produce) ──────────────────────────
@@ -1980,7 +1506,6 @@ object KafkaWire {
       require(transactionalId != null && idempotent,
         "transactions need transactionalId + idempotent=true")
       ensure()
-      require(magic >= 2, "transactions need a record-batch-v2 broker")
       inTxn = true
       txnParts.clear()
       txnHasWork = false
@@ -2022,9 +1547,9 @@ object KafkaWire {
         timestamp: Long, codec: Int = Codec.None): Long =
       sendRecords(partition, records.zipWithIndex.map { case ((k, v), i) =>
         Record(i.toLong, timestamp, k, v) }, codec)
-    /** Full-fidelity send: per-record timestamps and (v2-only)
-      * headers. Record offsets are ignored — positions in the batch
-      * define the relative offsets. I/O failures reconnect and
+    /** Full-fidelity send: per-record timestamps and headers. Record
+      * offsets are ignored — positions in the batch define the
+      * relative offsets. I/O failures reconnect and
       * re-send with the SAME baseSequence (idempotent mode), so the
       * broker drops the duplicate; fencing/sequence errors are
       * RuntimeExceptions and NOT retried. */
@@ -2034,33 +1559,21 @@ object KafkaWire {
       while (true) {
         try {
           ensure()
-          return if (magic >= 2) {
-            if (inTxn && !txnParts.contains(partition)) {
-              addPartitionsToTxn(conn, transactionalId, pid, pEpoch,
-                topic, Seq(partition))
-              txnParts += partition
-            }
-            val based = records.zipWithIndex.map { case (r, i) =>
-              r.copy(offset = i.toLong) }
-            val baseSeq = if (idempotent) seqs.getOrElse(partition, 0) else -1
-            val batch = encodeRecordBatch(0L, based, codec, pid,
-              if (idempotent) pEpoch else -1, baseSeq,
-              transactional = inTxn)
-            val off = produceV3(connFor(partition), topic, partition, batch,
-              if (inTxn) transactionalId else null, acksCode)
-            if (idempotent) seqs(partition) = baseSeq + records.length
-            off
-          } else {
-            if (records.exists(_.headers.nonEmpty))
-              throw new IllegalArgumentException(
-                "record headers need record-batch v2; the broker/format " +
-                  "negotiated v1")
-            // v1 has no per-record timestamps: stamp the wrapper max,
-            // the same loss a real broker's down-conversion accepts
-            val ts = records.iterator.map(_.timestamp).max
-            produce(connFor(partition), topic, partition,
-              records.map(r => (r.key, r.value)), ts, codec, acksCode)
+          if (inTxn && !txnParts.contains(partition)) {
+            addPartitionsToTxn(conn, transactionalId, pid, pEpoch,
+              topic, Seq(partition))
+            txnParts += partition
           }
+          val based = records.zipWithIndex.map { case (r, i) =>
+            r.copy(offset = i.toLong) }
+          val baseSeq = if (idempotent) seqs.getOrElse(partition, 0) else -1
+          val batch = encodeRecordBatch(0L, based, codec, pid,
+            if (idempotent) pEpoch else -1, baseSeq,
+            transactional = inTxn)
+          val off = produceV3(connFor(partition), topic, partition, batch,
+            if (inTxn) transactionalId else null, acksCode)
+          if (idempotent) seqs(partition) = baseSeq + records.length
+          return off
         }
         catch {
           case e: NotLeaderException =>
@@ -2168,7 +1681,7 @@ object KafkaWire {
             route = leaderRoute(host, port, topic, p)
             val c = route.conn
             val fetcher = new GrowingFetcher(c, topic, p,
-              currentLeaderEpoch = route.epoch, apisHint = route.apis)
+              currentLeaderEpoch = route.epoch)
             if (off < 0)
               off = groupId
                 .flatMap(g =>

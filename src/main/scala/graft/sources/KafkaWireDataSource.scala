@@ -36,17 +36,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * minPartitions (split per-topic-partition offset ranges into at
   * least this many scan tasks — a 1-partition topic otherwise caps
   * consume at one task); includeHeaders true|false (append the
-  * `headers ARRAY<STRUCT<key,value>>` column, v1-stored records read
-  * as empty arrays); isolationLevel read_uncommitted|read_committed
+  * `headers ARRAY<STRUCT<key,value>>` column; a record without
+  * headers reads as an empty array); isolationLevel read_uncommitted|read_committed
   * (committed reads stop at the last stable offset, filter aborted
   * transactions, and never surface control markers); failOnDataLoss
   * true|false (what to do when retention deleted offsets a checkpoint
   * still points at: true — the default, the stock connector's — fails
   * the query loudly; false skips to the surviving log head with a
   * WARN); sink-side:
-  * codec none|gzip|snappy|lz4, format auto|v1|v2 (record-batch
-  * negotiation), idempotent true|false (v2 producer sequences,
-  * broker-side retry dedup), transactionalIdPrefix (EXACTLY-ONCE: one
+  * codec none|gzip|snappy|lz4 (record-batch compression), idempotent
+  * true|false (producer sequences, broker-side retry dedup),
+  * transactionalIdPrefix (EXACTLY-ONCE: one
   * transaction per task, committed in commit(), aborted on task
   * failure — a read_committed consumer never sees a failed attempt's
   * rows); transactionalCommit task|job (job = tasks leave their
@@ -54,7 +54,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * task succeeded — a job failing at task 3 of 4 publishes ZERO rows;
   * see KafkaWireWrite.endAll for the honest atomicity/availability
   * trade); an input `headers` column of the canonical struct shape is
-  * written as v2 record headers. Batch reads (spark.read) scan
+  * written as record headers. Batch reads (spark.read) scan
   * earliest..latest.
   */
 class KafkaWireDataSource extends TableProvider with DataSourceRegister {
@@ -121,25 +121,16 @@ class KafkaWireDataSource extends TableProvider with DataSourceRegister {
       case other => throw new IllegalArgumentException(
         s"acks must be all|-1|1, got '$other'")
     }
-    val format = Option(opts.get("format")).getOrElse("auto")
-    require(format == "auto" || format == "v1" || format == "v2",
-      s"format must be auto|v1|v2, got '$format'")
     val idempotent = Option(opts.get("idempotent")).exists { v =>
       require(v == "true" || v == "false",
         s"idempotent must be true or false, got '$v'")
       v == "true"
     }
-    require(!(idempotent && format == "v1"),
-      "idempotent=true needs record-batch v2; format=v1 cannot carry " +
-        "producer sequences")
     val isolation = KafkaWire.Isolation.forName(
       Option(opts.get("isolationLevel")).getOrElse("read_uncommitted"))
     val txnPrefix = Option(opts.get("transactionalIdPrefix"))
     txnPrefix.foreach(pfx => require(pfx.nonEmpty,
       "transactionalIdPrefix must be non-empty"))
-    require(!(txnPrefix.isDefined && format == "v1"),
-      "transactionalIdPrefix needs record-batch v2; format=v1 cannot " +
-        "carry transactions")
     val txnJobCommit = Option(opts.get("transactionalCommit")).map { v =>
       require(v == "task" || v == "job",
         s"transactionalCommit must be task or job, got '$v'")
@@ -176,7 +167,7 @@ class KafkaWireDataSource extends TableProvider with DataSourceRegister {
     maxOffsets.foreach(m => require(m > 0,
       s"maxOffsetsPerTrigger must be positive, got $m"))
     new KafkaWireTable(host, Integer.parseInt(port), topic, starting, codec,
-      maxOffsets, format, idempotent, minPartitions, includeHeaders,
+      maxOffsets, idempotent, minPartitions, includeHeaders,
       isolation, txnPrefix, startingTs, endingTs, txnJobCommit,
       failOnDataLoss, tsStrategy, acks)
   }
@@ -207,7 +198,7 @@ object KafkaWireDataSource {
 
 private[sources] class KafkaWireTable(host: String, port: Int, topic: String,
     startingOffsets: String = "earliest", codec: Int = KafkaWire.Codec.None,
-    maxOffsetsPerTrigger: Option[Long] = None, format: String = "auto",
+    maxOffsetsPerTrigger: Option[Long] = None,
     idempotent: Boolean = false, minPartitions: Option[Int] = None,
     includeHeaders: Boolean = false,
     isolation: Int = KafkaWire.Isolation.ReadUncommitted,
@@ -237,7 +228,7 @@ private[sources] class KafkaWireTable(host: String, port: Int, topic: String,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write =
-        new KafkaWireWrite(host, port, topic, info.schema(), codec, format,
+        new KafkaWireWrite(host, port, topic, info.schema(), codec,
           idempotent, txnPrefix, txnJobCommit, acks)
     }
 }
@@ -246,11 +237,10 @@ private[sources] class KafkaWireTable(host: String, port: Int, topic: String,
   * `writeStream.format("graft-kafka")` — the declarative shape of the
   * reference's producer loop (collect/producer.py:50), replacing the
   * foreachPartition/foreachBatch helpers with the engine-managed
-  * epoch-id-keyed protocol. Semantics are AT-LEAST-ONCE, exactly like
-  * the stock connector's: a task retry or epoch replay re-produces its
-  * rows (the wire protocol has no transactions in the pre-flexible
-  * subset), and the canonical downstream absorber is the J1 anti-join
-  * upsert. The input needs `key`/`value` columns of STRING or BINARY
+  * epoch-id-keyed protocol. Without `transactionalIdPrefix`,
+  * semantics are AT-LEAST-ONCE, exactly like the stock connector's: a
+  * task retry or epoch replay re-produces its rows, and the canonical
+  * downstream absorber is the J1 anti-join upsert. The input needs `key`/`value` columns of STRING or BINARY
   * type (the stock connector's contract — ACCEPT_ANY_SCHEMA skips the
   * engine's schema check, so the type gate lives here and fails at
   * PLAN time, never by reinterpreting row bytes); extra columns are
@@ -259,7 +249,7 @@ private[sources] class KafkaWireTable(host: String, port: Int, topic: String,
   * producer stamps per send), not per query start. */
 private[sources] class KafkaWireWrite(host: String, port: Int, topic: String,
     schema: StructType, codec: Int = KafkaWire.Codec.None,
-    format: String = "auto", idempotent: Boolean = false,
+    idempotent: Boolean = false,
     txnPrefix: Option[String] = None,
     txnJobCommit: Boolean = false,
     acks: String = "all") extends Write {
@@ -278,9 +268,7 @@ private[sources] class KafkaWireWrite(host: String, port: Int, topic: String,
   private val valueBinary = binaryness("value")
   // optional headers column (the stock connector's write contract):
   // validated at PLAN time against the canonical array<struct<key
-  // string, value binary>> shape; carried only by record-batch v2, so
-  // format=v1 with a headers column is rejected here, never dropped
-  // silently on the wire
+  // string, value binary>> shape
   private val headersIdx: Int =
     if (!schema.fieldNames.contains("headers")) -1
     else {
@@ -293,13 +281,11 @@ private[sources] class KafkaWireWrite(host: String, port: Int, topic: String,
       require(ok, s"graft-kafka sink: column 'headers' must be " +
         s"${KafkaWireDataSource.headersType.simpleString}, " +
         s"got ${schema("headers").dataType.simpleString}")
-      require(format != "v1",
-        "a headers column needs record-batch v2; format=v1 cannot carry headers")
       schema.fieldIndex("headers")
     }
   private def factory = KafkaWriterFactory(host, port, topic,
     schema.fieldIndex("key"), schema.fieldIndex("value"),
-    keyBinary, valueBinary, codec, format, idempotent, headersIdx,
+    keyBinary, valueBinary, codec, idempotent, headersIdx,
     txnPrefix, txnJobCommit, acks)
 
   // ── transactionalCommit=job: driver-coordinated EndTxn fan-out ──────
@@ -383,7 +369,7 @@ private[sources] case class KafkaTxnPending(transactionalId: String,
 private[sources] case class KafkaWriterFactory(host: String, port: Int,
     topic: String, keyIdx: Int, valueIdx: Int,
     keyBinary: Boolean, valueBinary: Boolean,
-    codec: Int = KafkaWire.Codec.None, format: String = "auto",
+    codec: Int = KafkaWire.Codec.None,
     idempotent: Boolean = false, headersIdx: Int = -1,
     txnPrefix: Option[String] = None, txnJobCommit: Boolean = false,
     acks: String = "all")
@@ -397,12 +383,12 @@ private[sources] case class KafkaWriterFactory(host: String, port: Int,
     txnPrefix.map(pfx => s"$pfx-$topic-$partitionId")
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new KafkaProduceWriter(host, port, topic, keyIdx, valueIdx,
-      keyBinary, valueBinary, codec, format, idempotent, headersIdx,
+      keyBinary, valueBinary, codec, idempotent, headersIdx,
       tid(partitionId), txnJobCommit, acks)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new KafkaProduceWriter(host, port, topic, keyIdx, valueIdx,
-      keyBinary, valueBinary, codec, format, idempotent, headersIdx,
+      keyBinary, valueBinary, codec, idempotent, headersIdx,
       tid(partitionId), txnJobCommit, acks)
 }
 
@@ -414,7 +400,7 @@ private[sources] case class KafkaWriterFactory(host: String, port: Int,
 private[sources] class KafkaProduceWriter(host: String, port: Int,
     topic: String, keyIdx: Int, valueIdx: Int,
     keyBinary: Boolean, valueBinary: Boolean,
-    codec: Int = KafkaWire.Codec.None, format: String = "auto",
+    codec: Int = KafkaWire.Codec.None,
     idempotent: Boolean = false, headersIdx: Int = -1,
     transactionalId: Option[String] = None,
     txnJobCommit: Boolean = false,
@@ -443,7 +429,7 @@ private[sources] class KafkaProduceWriter(host: String, port: Int,
   // engine-side 2PC ledger (the Flink TwoPhaseCommitSink shape), which
   // Spark's DSv2 does not offer a recoverable hook for.
   private val prod = new KafkaWire.RetryingProducer(host, port, topic,
-    format = format, idempotent = idempotent || transactionalId.isDefined,
+    idempotent = idempotent || transactionalId.isDefined,
     transactionalId = transactionalId.orNull, acks = acks)
   if (transactionalId.isDefined) prod.beginTransaction()
   private val buf =
@@ -798,8 +784,7 @@ private[sources] class KafkaRangeReader(p: KafkaRangePartition)
     KafkaWire.leaderRoute(p.host, p.port, p.topic, p.partition)
   private def conn = route.conn
   private var fetcher = new KafkaWire.GrowingFetcher(conn, p.topic,
-    p.partition, p.isolation, currentLeaderEpoch = route.epoch,
-    apisHint = route.apis)
+    p.partition, p.isolation, currentLeaderEpoch = route.epoch)
   private var reroutes = 0
   private var buf: Seq[KafkaWire.Record] = Seq.empty
   private var i = -1
@@ -837,8 +822,7 @@ private[sources] class KafkaRangeReader(p: KafkaRangePartition)
               route = KafkaWire.leaderRoute(p.host, p.port,
                 p.topic, p.partition)
               fetcher = new KafkaWire.GrowingFetcher(conn, p.topic,
-                p.partition, p.isolation, currentLeaderEpoch = route.epoch,
-                apisHint = route.apis)
+                p.partition, p.isolation, currentLeaderEpoch = route.epoch)
             } catch {
               // the offline window: no live leader to resolve yet —
               // the next fetchAt on the closed conn throws back into
@@ -891,8 +875,7 @@ private[sources] class KafkaRangeReader(p: KafkaRangePartition)
       if (r.value == null) null else UTF8String.fromBytes(r.value))
     if (!p.includeHeaders) InternalRow(core: _*)
     else {
-      // v2 per-record headers; a v1-format record reads as an empty
-      // array (v1 cannot carry headers), never null
+      // per-record headers; none reads as an empty array, never null
       val hs = new org.apache.spark.sql.catalyst.util.GenericArrayData(
         r.headers.map { case (k, v) =>
           InternalRow(UTF8String.fromString(k), v) }.toArray[Any])

@@ -76,7 +76,7 @@ class BrokerRegressionSpec extends AnyFunSuite {
   }
 
   test("ApiVersions v1 and v2 are served: v0 body plus trailing throttle_time_ms") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = 2)
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {

@@ -2,20 +2,17 @@ package graft
 
 import graft.sources.KafkaWire
 
-/** KIP-482 FLEXIBLE VERSIONS on the negotiation path — the r16
-  * verdict's #6: tagged-field/compact encodings for ApiVersions v3
-  * and Metadata v9, so this client could negotiate with a modern real
-  * broker (which serves the classic pinned versions too, but prefers
-  * flexible ones). The double serves BOTH generations from one api
-  * table; these specs pin that the two generations agree exactly and
-  * that the special cases of the flexible protocol hold:
+/** KIP-482 FLEXIBLE VERSIONS — the r16 verdict's #6: tagged-field/
+  * compact encodings for ApiVersions v3 and Metadata v9, the versions
+  * a modern real broker prefers. These specs pin the special cases of
+  * the flexible protocol and the one-version-per-API data path:
   *
   *  - ApiVersions v3's RESPONSE header stays v0 (so a client that
-  *    guessed too high can still read the error code);
+  *    guessed too high can still read the error code), and v3 and v0
+  *    advertise one api table;
   *  - request header v2 carries a tag buffer after client_id;
-  *  - Metadata v9 is field-for-field the v7 view in compact clothes;
-  *  - a pre-flexible broker (serveFormat = 1) advertises neither —
-  *    the downgrade path stays live. */
+  *  - each data-path API advertises exactly the one version the
+  *    client sends, and the double serves it. */
 class FlexibleVersionsSpec extends SparkSuite {
 
   test("ApiVersions v3 and v0 advertise the identical api table, and v3 includes itself") {
@@ -33,30 +30,7 @@ class FlexibleVersionsSpec extends SparkSuite {
     } finally cl.stop()
   }
 
-  test("Metadata v9 reports the same cluster view as v7 — brokers, leaders, epochs, ISR") {
-    val cl = new MiniKafkaCluster(numBrokers = 2, numPartitions = 2,
-      replicationFactor = 2)
-    try {
-      // give the partitions some history so epochs differ from 0
-      val prod = new KafkaWire.RetryingProducer("localhost",
-        cl.bootstrapPort, "t", acks = "all")
-      try prod.send(1, Seq(("k".getBytes, "v".getBytes)), 1L)
-      finally prod.close()
-      cl.moveLeader("t", 1, 0)
-      val c = new KafkaWire.Conn("localhost", cl.bootstrapPort)
-      try {
-        val v7 = KafkaWire.clusterMetadataV7(c, "t")
-        val v9 = KafkaWire.clusterMetadataV9(c, "t")
-        assert(v9.brokers === v7.brokers)
-        assert(v9.leaders === v7.leaders)
-        assert(v9.epochs === v7.epochs)
-        assert(v9.isr === v7.isr)
-        assert(v9.epochOf(1) === cl.leaderEpochOf("t", 1))
-      } finally c.close()
-    } finally cl.stop()
-  }
-
-  test("every ADVERTISED version inside the ranges is served — the middle Metadata and Fetch versions included") {
+  test("the data path advertises one version per API, the one the client sends, and serves it") {
     val cl = new MiniKafkaCluster(numBrokers = 1, numPartitions = 2)
     try {
       val prod = new KafkaWire.RetryingProducer("localhost",
@@ -66,102 +40,22 @@ class FlexibleVersionsSpec extends SparkSuite {
       finally prod.close()
       val c = new KafkaWire.Conn("localhost", cl.bootstrapPort)
       try {
-        // Metadata v1..v8: parse each version's exact field layout and
-        // confirm the same leader answer — a real client may pick ANY
-        // advertised version, and an unserved middle would kill the
-        // connection instead (the wire-parity gap the range implies)
-        (1 to 8).foreach { v =>
-          val w = new KafkaWire.Writer().int32(1).str("t")
-          if (v >= 4) w.int8(1)
-          if (v >= 8) { w.int8(0); w.int8(0) }
-          val r = c.call(3, v, w.result())
-          if (v >= 3) r.int32() // throttle
-          val nb = r.int32()
-          (0 until nb).foreach { _ =>
-            r.int32(); r.str(); r.int32(); if (v >= 1) r.str()
-          }
-          if (v >= 2) r.str()   // cluster_id
-          if (v >= 1) r.int32() // controller_id
-          val nt = r.int32(); assert(nt === 1, s"metadata v$v")
-          assert(r.int16() === 0)
-          assert(r.str() === "t")
-          if (v >= 1) r.int8()
-          val np = r.int32(); assert(np === 2, s"metadata v$v partitions")
-          (0 until np).foreach { _ =>
-            assert(r.int16() === 0)
-            r.int32() // partition
-            val leader = r.int32()
-            assert(leader === 0, s"metadata v$v leader")
-            if (v >= 7) assert(r.int32() >= 0, s"metadata v$v epoch")
-            val nr = r.int32(); (0 until nr).foreach(_ => r.int32())
-            val ni = r.int32(); (0 until ni).foreach(_ => r.int32())
-            if (v >= 5) {
-              val no = r.int32(); (0 until no).foreach(_ => r.int32())
-            }
-          }
-          if (v >= 8) r.int32()
-          if (v >= 8) r.int32()
-          assert(r.remaining === 0, s"metadata v$v trailing bytes")
-        }
-        // Fetch v3..v8 (v2/v4/v9 covered elsewhere): each serves the
-        // same 3 records from offset 0 with its version's field walk
-        (3 to 8).foreach { v =>
-          val w = new KafkaWire.Writer()
-            .int32(-1).int32(100).int32(0)
-          if (v >= 3) w.int32(1 << 20)
-          if (v >= 4) w.int8(0)
-          if (v >= 7) { w.int32(0); w.int32(-1) }
-          w.int32(1).str("t").int32(1).int32(0)
-          w.int64(0L)
-          if (v >= 5) w.int64(-1L)
-          w.int32(1 << 20)
-          if (v >= 7) w.int32(0) // forgotten_topics_data
-          val r = c.call(1, v, w.result())
-          r.int32() // throttle
-          if (v >= 7) { assert(r.int16() === 0); r.int32() }
-          assert(r.int32() === 1); r.str()
-          assert(r.int32() === 1)
-          r.int32() // partition
-          assert(r.int16() === 0, s"fetch v$v error")
-          val hw = r.int64()
-          assert(hw === 3L, s"fetch v$v hw")
-          if (v >= 4) {
-            r.int64() // lso
-            if (v >= 5) r.int64() // log_start_offset
-            val na = r.int32(); (0 until na).foreach { _ =>
-              r.int64(); r.int64()
-            }
-          }
-          val set = r.bytes()
-          val recs = KafkaWire.decodeRecordSet(set)
-          assert(recs.length === 3, s"fetch v$v records")
-          assert(r.remaining === 0, s"fetch v$v trailing bytes")
+        val (_, apis) = KafkaWire.apiVersions(c)
+        // Produce 3, Fetch 9, ListOffsets 2, Metadata 9 — no ranges
+        assert(apis(0) === (3, 3) && apis(1) === (9, 9))
+        assert(apis(2) === (2, 2) && apis(3) === (9, 9))
+        val view = KafkaWire.clusterMetadata(c, "t")
+        assert(view.partitions === 2 && view.leaders(0) === 0)
+        assert(view.epochOf(0) === cl.leaderEpochOf("t", 0))
+        val (recs, hw, nextPos) = KafkaWire.fetch(c, "t", 0, 0L)
+        assert(recs.length === 3 && hw === 3L && nextPos === 3L)
+        assert(KafkaWire.listOffset(c, "t", 0) === 3L)
+        // a version outside the advertised table is not served: the
+        // double drops the connection instead of answering
+        intercept[java.io.IOException] {
+          c.call(1, 4, new KafkaWire.Writer().int32(-1).result())
         }
       } finally c.close()
     } finally cl.stop()
-  }
-
-  test("the negotiating client takes the flexible path when offered and degrades when not") {
-    val modern = new MiniKafkaCluster(numBrokers = 1, numPartitions = 2)
-    val old = new MiniKafkaServer(numPartitions = 2, serveFormat = 1)
-    try {
-      // modern: bestClusterMetadata rides ApiVersions v3 → Metadata v9
-      val cm = new KafkaWire.Conn("localhost", modern.bootstrapPort)
-      try {
-        val view = KafkaWire.bestClusterMetadata(cm, "t")
-        assert(view.epochs.nonEmpty, "the flexible path carries epochs")
-        assert(view.partitions === 2)
-      } finally cm.close()
-      // old broker: neither flexible api advertised; the client falls
-      // back to Metadata v0 — no epochs, fetches un-pinned
-      val co = new KafkaWire.Conn("localhost", old.port)
-      try {
-        val (_, apis) = KafkaWire.apiVersions(co)
-        assert(apis(18) === (0, 0) && apis(3) === (0, 0))
-        val view = KafkaWire.bestClusterMetadata(co, "t")
-        assert(view.epochs.isEmpty, "pre-flexible view has no epochs")
-        assert(view.partitions === 2)
-      } finally co.close()
-    } finally { modern.stop(); old.stop() }
   }
 }

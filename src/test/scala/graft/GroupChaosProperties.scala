@@ -36,7 +36,7 @@ object GroupChaosProperties extends Properties("graft.groupchaos") {
 
   private val u8 = java.nio.charset.StandardCharsets.UTF_8
   private val state = new KafkaClusterState
-  private val srv = new MiniKafkaServer(numPartitions = 4, serveFormat = 2,
+  private val srv = new MiniKafkaServer(numPartitions = 4,
     state = state)
   private val caseIds = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -59,7 +59,7 @@ object GroupChaosProperties extends Properties("graft.groupchaos") {
 
   private def produceTo(topic: String, p: Int, values: Seq[String]): Unit = {
     val c = new KafkaWire.Conn("localhost", srv.port)
-    try KafkaWire.produce(c, topic, p,
+    try KafkaTestKit.produce(c, topic, p,
       values.map(v => (v.getBytes(u8), v.getBytes(u8))), 1L)
     finally c.close()
   }

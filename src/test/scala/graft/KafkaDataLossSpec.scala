@@ -33,17 +33,17 @@ class KafkaDataLossSpec extends SparkSuite {
         // earliest now resolves to the truncated head, not 0
         assert(KafkaWire.listOffset(c, "t", 0, -2L) === 10L)
         assert(KafkaWire.listOffset(c, "t", 0, -1L) === 20L)
-        // a fetch below the head throws the TYPED exception — both
-        // fetch versions; never an empty "nothing here" result
+        // a fetch below the head throws the TYPED exception — at the
+        // old start and mid-gap; never an empty "nothing here" result
         val e1 = intercept[KafkaWire.OffsetOutOfRangeException] {
           KafkaWire.fetch(c, "t", 0, 0L)
         }
         assert(e1.offset === 0L && e1.partition === 0)
         intercept[KafkaWire.OffsetOutOfRangeException] {
-          KafkaWire.fetchV4Detailed(c, "t", 0, 5L)
+          KafkaWire.fetch(c, "t", 0, 5L)
         }
         // the surviving range reads back whole
-        val (recs, hw) = KafkaWire.fetchV4(c, "t", 0, 10L)
+        val (recs, hw, _) = KafkaWire.fetch(c, "t", 0, 10L)
         assert(hw === 20L)
         assert(recs.map(r => new String(r.key, u8)) ===
           (10 until 20).map(i => s"k$i"))

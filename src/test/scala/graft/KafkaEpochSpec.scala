@@ -8,7 +8,7 @@ import graft.sources.KafkaWire
   * protocol's own fencing token. These specs pin the three surfaces
   * that carry it:
   *
-  *  - Metadata v7 reports each partition's LEADER_EPOCH, and the
+  *  - Metadata v9 reports each partition's LEADER_EPOCH, and the
   *    epoch is MONOTONIC across every election path (clean handover,
   *    broker-death election, unclean promotion, revived-leader
   *    re-election);
@@ -30,7 +30,7 @@ class KafkaEpochSpec extends SparkSuite {
   private def kv(s: String): (Array[Byte], Array[Byte]) =
     (s.getBytes(u8), s.getBytes(u8))
 
-  test("Metadata v7 carries the leader epoch, and it bumps monotonically across every election path") {
+  test("Metadata v9 carries the leader epoch, and it bumps monotonically across every election path") {
     val cl = new MiniKafkaCluster(numBrokers = 2, numPartitions = 2,
       replicationFactor = 2)
     try {
@@ -41,7 +41,7 @@ class KafkaEpochSpec extends SparkSuite {
 
       def wireEpoch(p: Int): Int = {
         val c = new KafkaWire.Conn("localhost", cl.bootstrapPort)
-        try KafkaWire.clusterMetadataV7(c, "t").epochOf(p)
+        try KafkaWire.clusterMetadata(c, "t").epochOf(p)
         finally c.close()
       }
       val e0 = wireEpoch(1)
@@ -67,10 +67,10 @@ class KafkaEpochSpec extends SparkSuite {
       assert(cl.leaderEpochOf("t", 1) === e2)
       assert(cl.isrOf("t", 1) === Set(0, 1))
 
-      // the metadata view also carries the ISR (v7 field walk)
+      // the metadata view also carries the ISR
       val c = new KafkaWire.Conn("localhost", cl.bootstrapPort)
       try {
-        val view = KafkaWire.clusterMetadataV7(c, "t")
+        val view = KafkaWire.clusterMetadata(c, "t")
         assert(view.isr(1).toSet === Set(0, 1))
         assert(view.leaders(1) === 1)
       } finally c.close()
@@ -117,13 +117,13 @@ class KafkaEpochSpec extends SparkSuite {
       val cur = cl.leaderEpochOf("t", 1)
       val c1 = connTo(1)
       try {
-        val (recs, _, _) = KafkaWire.fetchV9Detailed(c1, "t", 1, 0L,
+        val (recs, _, _) = KafkaWire.fetch(c1, "t", 1, 0L,
           currentLeaderEpoch = cur)
         assert(recs.map(r => new String(r.value, u8)) ===
           (0 until 5).map(i => s"a$i"))
         // a future epoch this broker has not seen: UNKNOWN
         intercept[KafkaWire.UnknownLeaderEpochException] {
-          KafkaWire.fetchV9Detailed(c1, "t", 1, 0L,
+          KafkaWire.fetch(c1, "t", 1, 0L,
             currentLeaderEpoch = cur + 7)
         }
       } finally c1.close()
@@ -134,17 +134,17 @@ class KafkaEpochSpec extends SparkSuite {
       val c2 = connTo(1)
       try {
         intercept[KafkaWire.FencedLeaderEpochException] {
-          KafkaWire.fetchV9Detailed(c2, "t", 1, 0L,
+          KafkaWire.fetch(c2, "t", 1, 0L,
             currentLeaderEpoch = cur)
         }
         // refreshing metadata (the recovery) yields the new epoch,
         // which serves again
         val fresh = cl.leaderEpochOf("t", 1)
-        val (recs, _, _) = KafkaWire.fetchV9Detailed(c2, "t", 1, 0L,
+        val (recs, _, _) = KafkaWire.fetch(c2, "t", 1, 0L,
           currentLeaderEpoch = fresh)
         assert(recs.length === 5)
         // opting out (-1) also serves — the pre-KIP-320 client
-        val (recs2, _, _) = KafkaWire.fetchV9Detailed(c2, "t", 1, 0L)
+        val (recs2, _, _) = KafkaWire.fetch(c2, "t", 1, 0L)
         assert(recs2.length === 5)
       } finally c2.close()
     } finally cl.stop()
@@ -173,12 +173,15 @@ class KafkaEpochSpec extends SparkSuite {
       try {
         val body = new KafkaWire.Writer()
           .int32(-1).int32(100).int32(0).int32(1 << 20).int8(0)
+          .int32(0).int32(-1) // session_id, session_epoch
           .int32(1).str("t")
-          .int32(1).int32(1).int64(0L).int32(1 << 20)
+          .int32(1).int32(1).int32(-1).int64(0L).int64(-1L).int32(1 << 20)
+          .int32(0) // forgotten_topics_data
           .result()
-        val r = c.call(1, 4, body)
-        r.int32(); r.int32(); r.str(); r.int32(); r.int32(); r.int16()
-        r.int64(); r.int64(); r.int32() // hw, lso, aborted count
+        val r = c.call(1, 9, body)
+        r.int32(); r.int16(); r.int32() // throttle, error, session_id
+        r.int32(); r.str(); r.int32(); r.int32(); r.int16()
+        r.int64(); r.int64(); r.int64(); r.int32() // hw, lso, log start, aborted
         val set = r.bytes()
         val batches = KafkaWire.decodeRecordBatches(set)
         assert(batches.map(_.partitionLeaderEpoch) === Seq(e0, e1))
@@ -323,11 +326,11 @@ class KafkaEpochSpec extends SparkSuite {
         "t", acks = "all")
       try {
         prod.send(1, (0 until 5).map(i => kv(s"a$i")), 1L)
-        // an epoch-aware consumer: metadata v7 names the epoch, the
+        // an epoch-aware consumer: metadata names the epoch, the
         // fetcher pins every fetch to it
         val boot = new KafkaWire.Conn("localhost", cl.bootstrapPort)
         val view =
-          try KafkaWire.clusterMetadataV7(boot, "t") finally boot.close()
+          try KafkaWire.clusterMetadata(boot, "t") finally boot.close()
         val (h, pt) = view.leaderAddr(1)
         val c = new KafkaWire.Conn(h, pt)
         try {
@@ -343,7 +346,7 @@ class KafkaEpochSpec extends SparkSuite {
           }
           val boot2 = new KafkaWire.Conn("localhost", cl.bootstrapPort)
           val view2 =
-            try KafkaWire.clusterMetadataV7(boot2, "t") finally boot2.close()
+            try KafkaWire.clusterMetadata(boot2, "t") finally boot2.close()
           val (h2, pt2) = view2.leaderAddr(1)
           val c2 = new KafkaWire.Conn(h2, pt2)
           try {

@@ -19,7 +19,7 @@ class KafkaGroupSpec extends SparkSuite {
   private def produceTo(srv: MiniKafkaServer, topic: String, p: Int,
       values: Seq[String]): Unit = {
     val c = new KafkaWire.Conn("localhost", srv.port)
-    try KafkaWire.produce(c, topic, p,
+    try KafkaTestKit.produce(c, topic, p,
       values.map(v => (s"k-$v".getBytes(u8), v.getBytes(u8))),
       1716500000000L)
     finally c.close()

@@ -35,14 +35,14 @@ class KafkaProtocolSpec extends SparkSuite {
         assert(KafkaWire.murmur2("foobar".getBytes(u8)) == -790332482)
         recs.groupBy(r => KafkaWire.partitionFor(r._1, 2)).foreach {
           case (p, rs) =>
-            val base = KafkaWire.produce(c, "article-topic", p, rs, 1716500000000L)
+            val base = KafkaTestKit.produce(c, "article-topic", p, rs, 1716500000000L)
             assert(base == 0L) // first batch per partition
         }
         assert(srv.stored("article-topic", 0).nonEmpty)
         assert(srv.stored("article-topic", 1).nonEmpty)
 
         val back = (0 until 2).flatMap { p =>
-          val (rs, hw) = KafkaWire.fetch(c, "article-topic", p, 0L)
+          val (rs, hw, _) = KafkaWire.fetch(c, "article-topic", p, 0L)
           assert(hw == rs.length.toLong) // read to the high watermark
           assert(rs.map(_.offset) == rs.indices.map(_.toLong)) // contiguous
           // the client's routing and the broker's storage agree
@@ -58,11 +58,11 @@ class KafkaProtocolSpec extends SparkSuite {
   }
 
   test("a corrupted message set fails CRC validation instead of yielding rows") {
-    val set = KafkaWire.encodeMessageSet(
-      Seq(("k".getBytes(u8), "value-payload".getBytes(u8))), 1L)
-    // flip one byte inside the message body (past offset+size+crc)
+    val set = KafkaWire.encodeRecordBatch(0L, Seq(KafkaWire.Record(0L, 1L,
+      "k".getBytes(u8), "value-payload".getBytes(u8))))
+    // flip one byte inside the record (inside the CRC32C coverage)
     set(set.length - 3) = (set(set.length - 3) ^ 0x01).toByte
-    intercept[java.io.IOException] { KafkaWire.decodeMessageSet(set) }
+    intercept[java.io.IOException] { KafkaWire.decodeRecordSet(set) }
   }
 
   test("null key and null value survive the wire (tombstone shape)") {
@@ -70,9 +70,9 @@ class KafkaProtocolSpec extends SparkSuite {
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
-        KafkaWire.produce(c, "t", 0,
+        KafkaTestKit.produce(c, "t", 0,
           Seq((null, "v0".getBytes(u8)), ("k1".getBytes(u8), null)), 5L)
-        val (rs, _) = KafkaWire.fetch(c, "t", 0, 0L)
+        val (rs, _, _) = KafkaWire.fetch(c, "t", 0, 0L)
         assert(rs.length == 2)
         assert(rs(0).key == null && new String(rs(0).value, u8) == "v0")
         assert(new String(rs(1).key, u8) == "k1" && rs(1).value == null)
@@ -85,16 +85,16 @@ class KafkaProtocolSpec extends SparkSuite {
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
-        KafkaWire.produce(c, "t", 0,
+        KafkaTestKit.produce(c, "t", 0,
           (1 to 5).map(i => (null, s"v$i".getBytes(u8))), 1L)
-        val (first, hw) = KafkaWire.fetch(c, "t", 0, 0L)
+        val (first, hw, _) = KafkaWire.fetch(c, "t", 0, 0L)
         assert(first.length == 5 && hw == 5L)
         // resume from the watermark: nothing new
-        val (empty, hw2) = KafkaWire.fetch(c, "t", 0, hw)
+        val (empty, hw2, _) = KafkaWire.fetch(c, "t", 0, hw)
         assert(empty.isEmpty && hw2 == 5L)
         // produce more, resume again: exactly the new tail
-        KafkaWire.produce(c, "t", 0, Seq((null, "v6".getBytes(u8))), 2L)
-        val (tail, _) = KafkaWire.fetch(c, "t", 0, hw)
+        KafkaTestKit.produce(c, "t", 0, Seq((null, "v6".getBytes(u8))), 2L)
+        val (tail, _, _) = KafkaWire.fetch(c, "t", 0, hw)
         assert(tail.map(r => new String(r.value, u8)) == Seq("v6"))
         assert(tail.head.offset == 5L)
       } finally c.close()
@@ -107,15 +107,16 @@ class KafkaProtocolSpec extends SparkSuite {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
         val big = (1 to 10).map(i => (null, Array.fill[Byte](100)(i.toByte)))
-        KafkaWire.produce(c, "t", 0, big, 1L)
-        // ~134 bytes per message: a 300-byte window holds 2 whole ones
-        val (page, hw) = KafkaWire.fetch(c, "t", 0, 0L, maxBytes = 300)
+        // five 2-record batches of ~279 bytes: a 300-byte window holds
+        // one whole batch (2 records) and a sliced tail
+        big.grouped(2).foreach(b => KafkaTestKit.produce(c, "t", 0, b, 1L))
+        val (page, hw, _) = KafkaWire.fetch(c, "t", 0, 0L, maxBytes = 300)
         assert(page.length == 2 && hw == 10L)
         // paging from the last delivered offset reaches the rest
         var off = page.last.offset + 1
         var n = page.length
         while (off < hw) {
-          val (p2, _) = KafkaWire.fetch(c, "t", 0, off, maxBytes = 300)
+          val (p2, _, _) = KafkaWire.fetch(c, "t", 0, off, maxBytes = 300)
           n += p2.length; off = p2.last.offset + 1
         }
         assert(n == 10)
@@ -123,43 +124,14 @@ class KafkaProtocolSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  test("gzip message sets: wrapper decode reconstructs v1 relative offsets") {
-    // Direct codec roundtrip with a broker-assigned wrapper offset:
-    // inner relatives 0..2 under wrapper offset 9 → absolutes 7,8,9.
-    val recs = (1 to 3).map(i => (s"k$i".getBytes(u8), s"기사 $i".getBytes(u8)))
-    val set = KafkaWire.encodeMessageSetGzip(recs, 42L)
-    // rewrite the wrapper offset the way a broker would (first 8 bytes)
-    val w = set.clone()
-    val bb = java.nio.ByteBuffer.wrap(w); bb.putLong(0, 9L)
-    val out = KafkaWire.decodeMessageSet(w)
-    assert(out.map(_.offset) == Seq(7L, 8L, 9L))
-    assert(out.map(r => new String(r.value, u8)) == Seq("기사 1", "기사 2", "기사 3"))
-    assert(out.forall(_.timestamp == 42L))
-
-    // End to end: a gzipped produce travels the wire, the broker
-    // decompresses-and-validates, fetch serves the records back.
-    val srv = new MiniKafkaServer(numPartitions = 1)
-    try {
-      val c = new KafkaWire.Conn("localhost", srv.port)
-      try {
-        KafkaWire.produce(c, "t", 0, recs, 42L, codec = KafkaWire.Codec.Gzip)
-        val (back, hw) = KafkaWire.fetch(c, "t", 0, 0L)
-        assert(hw == 3L && back.length == 3)
-        assert(back.map(r => new String(r.key, u8)) == Seq("k1", "k2", "k3"))
-        assert(back.map(_.offset) == Seq(0L, 1L, 2L))
-      } finally c.close()
-    } finally srv.stop()
-  }
-
-  for (bfmt <- Seq(1, 2))
-  test(s"graft-kafka readStream: earliest start, checkpointed resume, exactly once (broker v$bfmt)") {
+  test("graft-kafka readStream: earliest start, checkpointed resume, exactly once (broker v2)") {
     import org.apache.spark.sql.streaming.Trigger
-    val srv = new MiniKafkaServer(numPartitions = 2, serveFormat = bfmt)
+    val srv = new MiniKafkaServer(numPartitions = 2)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       def send(vals: String*): Unit =
         vals.groupBy(v => KafkaWire.partitionFor(v.getBytes(u8), 2)).foreach {
-          case (p, vs) => KafkaWire.produce(c, "t", p,
+          case (p, vs) => KafkaTestKit.produce(c, "t", p,
             vs.map(v => (v.getBytes(u8), s"payload-$v".getBytes(u8))), 1L)
         }
       try {
@@ -252,7 +224,7 @@ class KafkaProtocolSpec extends SparkSuite {
         // across successive polls of the same group
         def send(vals: String*): Unit =
           vals.groupBy(v => KafkaWire.partitionFor(v.getBytes(u8), 2)).foreach {
-            case (p, vs) => KafkaWire.produce(c, "articles", p,
+            case (p, vs) => KafkaTestKit.produce(c, "articles", p,
               vs.map(v => (v.getBytes(u8), v.getBytes(u8))), 1L)
           }
         send("a", "b", "c")
@@ -281,7 +253,7 @@ class KafkaProtocolSpec extends SparkSuite {
     val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
-      try KafkaWire.produce(c, "article-topic", 0,
+      try KafkaTestKit.produce(c, "article-topic", 0,
         Seq(("k1".getBytes(u8), """{"t":"기사"}""".getBytes(u8))), 7L)
       finally c.close()
       spark.sql("DROP TABLE IF EXISTS news_wire")
@@ -299,9 +271,8 @@ class KafkaProtocolSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  for (bfmt <- Seq(1, 2))
-  test(s"S2→S3 end to end: RSS → produceDataFrame → broker → pollOnce → enrich (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 2, serveFormat = bfmt)
+  test("S2→S3 end to end: RSS → produceDataFrame → broker → pollOnce → enrich (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 2)
     try {
       val fake = new Rss.FeedFetcher {
         def fetch(url: String): Seq[Rss.FeedEntry] = Seq(

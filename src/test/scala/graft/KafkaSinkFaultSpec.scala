@@ -22,15 +22,8 @@ class KafkaSinkFaultSpec extends SparkSuite {
 
   private val u8 = java.nio.charset.StandardCharsets.UTF_8
 
-  /** The whole fault/sink/stream matrix runs against BOTH broker
-    * generations: serveFormat=1 emulates a pre-0.11 broker (the
-    * client negotiates down to message-format v1), serveFormat=2 a
-    * modern one (record-batch v2 on Produce v3 / Fetch v4). Same
-    * client code, both wire formats — the r13 directive. */
-  private val brokerFormats = Seq(1, 2)
-
-  for (bfmt <- brokerFormats) test(s"df.write.format(graft-kafka): batch DSv2 write lands murmur2-routed records (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 2, serveFormat = bfmt)
+  test("df.write.format(graft-kafka): batch DSv2 write lands murmur2-routed records (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 2)
     try {
       import spark.implicits._
       (1 to 40).map(i => (s"key-$i", s"val-$i")).toDF("key", "value")
@@ -49,8 +42,8 @@ class KafkaSinkFaultSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  for (bfmt <- brokerFormats) test(s"writeStream.format(graft-kafka): epoch-keyed sink with checkpointed resume (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 2, serveFormat = bfmt)
+  test("writeStream.format(graft-kafka): epoch-keyed sink with checkpointed resume (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 2)
     try {
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -112,19 +105,19 @@ class KafkaSinkFaultSpec extends SparkSuite {
     assert(messages(err).exists(_.contains("host, port, topic are required")))
   }
 
-  // ── r12 advice #1: a gzip wrapper batch serves below-cursor records
-  // the consumer must drop. The broker double now stores batches and
-  // serves whole wrappers, so this is testable for real. ─────────────
-  for (bfmt <- brokerFormats) test(s"resume inside a gzip wrapper: below-cursor records are dropped, not re-emitted (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  // ── r12 advice #1: a gzip batch serves below-cursor records the
+  // consumer must drop. The broker double stores batches and serves
+  // them whole, so this is testable for real. ───────────────────────
+  test("resume inside a gzip wrapper: below-cursor records are dropped, not re-emitted (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
         val recs = (0 to 4).map(i => (s"k$i".getBytes(u8), s"v$i".getBytes(u8)))
-        KafkaWire.produce(c, "t", 0, recs, 9L, codec = KafkaWire.Codec.Gzip)
-        // the raw wire serves the WHOLE wrapper from offset 2 — proof
+        KafkaTestKit.produce(c, "t", 0, recs, 9L, codec = KafkaWire.Codec.Gzip)
+        // the raw wire serves the WHOLE batch from offset 2 — proof
         // the below-cursor records really travel
-        val (raw, _) = KafkaWire.fetch(c, "t", 0, 2L)
+        val (raw, _, _) = KafkaWire.fetch(c, "t", 0, 2L)
         assert(raw.map(_.offset) == Seq(0L, 1L, 2L, 3L, 4L))
       } finally c.close()
       // pollOnce from offset 2 must emit exactly 2..4 — once
@@ -135,12 +128,12 @@ class KafkaSinkFaultSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  for (bfmt <- brokerFormats) test(s"gzip wrapper spanning a micro-batch boundary: streaming stays exactly-once (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("gzip wrapper spanning a micro-batch boundary: streaming stays exactly-once (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
-        KafkaWire.produce(c, "t", 0,
+        KafkaTestKit.produce(c, "t", 0,
           (0 to 2).map(i => (s"a$i".getBytes(u8), s"v$i".getBytes(u8))), 1L,
           codec = KafkaWire.Codec.Gzip)
         val ckpt = java.nio.file.Files.createTempDirectory("gz-ckpt").toString
@@ -155,7 +148,7 @@ class KafkaSinkFaultSpec extends SparkSuite {
           q.processAllAvailable(); q.stop()
         }
         runOnce()
-        KafkaWire.produce(c, "t", 0,
+        KafkaTestKit.produce(c, "t", 0,
           (3 to 5).map(i => (s"a$i".getBytes(u8), s"v$i".getBytes(u8))), 2L,
           codec = KafkaWire.Codec.Gzip)
         runOnce()
@@ -168,17 +161,17 @@ class KafkaSinkFaultSpec extends SparkSuite {
 
   // ── r12 advice #2: a message larger than max_bytes yields ZERO
   // complete records; the reader must grow-and-retry, never skip. ────
-  for (bfmt <- brokerFormats) test(s"oversized message: the reader grows max_bytes instead of silently skipping (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("oversized message: the reader grows max_bytes instead of silently skipping (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
         val big = Array.fill[Byte](3 << 20)(7) // 3 MiB > the 1 MiB start
-        KafkaWire.produce(c, "t", 0, Seq(("small".getBytes(u8), "v".getBytes(u8))), 1L)
-        KafkaWire.produce(c, "t", 0, Seq(("big".getBytes(u8), big)), 2L)
-        KafkaWire.produce(c, "t", 0, Seq(("tail".getBytes(u8), "w".getBytes(u8))), 3L)
+        KafkaTestKit.produce(c, "t", 0, Seq(("small".getBytes(u8), "v".getBytes(u8))), 1L)
+        KafkaTestKit.produce(c, "t", 0, Seq(("big".getBytes(u8), big)), 2L)
+        KafkaTestKit.produce(c, "t", 0, Seq(("tail".getBytes(u8), "w".getBytes(u8))), 3L)
         // the raw first fetch at the big message really is empty
-        val (raw, hw) = KafkaWire.fetch(c, "t", 0, 1L)
+        val (raw, hw, _) = KafkaWire.fetch(c, "t", 0, 1L)
         assert(raw.isEmpty && hw == 3L,
           "broker must truncate the oversized message at max_bytes")
       } finally c.close()
@@ -198,8 +191,8 @@ class KafkaSinkFaultSpec extends SparkSuite {
 
   // ── fault injection: the retry/abort contract ──────────────────────
 
-  for (bfmt <- brokerFormats) test(s"produce retry after a pre-append connection drop: no loss, no duplicate (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("produce retry after a pre-append connection drop: no loss, no duplicate (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       srv.dropNextProduce.set(1)
       val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t")
@@ -212,8 +205,8 @@ class KafkaSinkFaultSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  for (bfmt <- brokerFormats) test(s"produce retry after a post-append drop DUPLICATES; the J1 upsert absorbs it (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("produce retry after a post-append drop DUPLICATES; the J1 upsert absorbs it (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       srv.dropNextProduceAfterAppend.set(1)
       val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t")
@@ -241,8 +234,8 @@ class KafkaSinkFaultSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  for (bfmt <- brokerFormats) test(s"exhausted produce retries surface the I/O failure (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("exhausted produce retries surface the I/O failure (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       srv.dropNextProduce.set(10) // more drops than maxAttempts
       val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t",
@@ -254,12 +247,12 @@ class KafkaSinkFaultSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  for (bfmt <- brokerFormats) test(s"torn fetch frame: loud I/O failure, no rows from a torn frame, no hang (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("torn fetch frame: loud I/O failure, no rows from a torn frame, no hang (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
-        KafkaWire.produce(c, "t", 0, Seq(("k".getBytes(u8), "v".getBytes(u8))), 1L)
+        KafkaTestKit.produce(c, "t", 0, Seq(("k".getBytes(u8), "v".getBytes(u8))), 1L)
         srv.truncateNextFetch.set(1)
         val t0 = System.nanoTime()
         intercept[java.io.IOException] { KafkaWire.fetch(c, "t", 0, 0L) }
@@ -268,14 +261,14 @@ class KafkaSinkFaultSpec extends SparkSuite {
       // a fresh connection reads the record intact
       val c2 = new KafkaWire.Conn("localhost", srv.port)
       try {
-        val (rs, _) = KafkaWire.fetch(c2, "t", 0, 0L)
+        val (rs, _, _) = KafkaWire.fetch(c2, "t", 0, 0L)
         assert(rs.length == 1 && new String(rs.head.value, u8) == "v")
       } finally c2.close()
     } finally srv.stop()
   }
 
-  for (bfmt <- brokerFormats) test(s"correlation-id mismatch ABORTS the producer — no blind resend (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("correlation-id mismatch ABORTS the producer — no blind resend (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t")
       try {
@@ -288,22 +281,21 @@ class KafkaSinkFaultSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  // ── the full v1 codec battery: gzip, snappy (xerial stream framing),
-  // lz4 (standard frame) — each wrapper round-trips the wire with
-  // absolute-offset reconstruction and CRC-verified inner records. ───
+  // ── the full codec battery: gzip, snappy (xerial stream framing),
+  // lz4 (standard frame) — each compressed batch round-trips the wire
+  // with absolute offsets and CRC32C-verified records. ───────────────
   for ((name, codec) <- Seq("gzip" -> KafkaWire.Codec.Gzip,
-      "snappy" -> KafkaWire.Codec.Snappy, "lz4" -> KafkaWire.Codec.Lz4);
-      bfmt <- brokerFormats) {
-    test(s"$name wrapper round-trips the wire with Korean payloads intact (broker v$bfmt)") {
-      val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+      "snappy" -> KafkaWire.Codec.Snappy, "lz4" -> KafkaWire.Codec.Lz4)) {
+    test(s"$name wrapper round-trips the wire with Korean payloads intact (broker v2)") {
+      val srv = new MiniKafkaServer(numPartitions = 1)
       try {
         val c = new KafkaWire.Conn("localhost", srv.port)
         try {
           val recs = (1 to 4).map(i =>
             (s"k$i".getBytes(u8), s"기사 본문 $i".getBytes(u8)))
-          KafkaWire.produce(c, "t", 0, Seq((null, "plain".getBytes(u8))), 1L)
-          KafkaWire.produce(c, "t", 0, recs, 2L, codec = codec)
-          val (back, hw) = KafkaWire.fetch(c, "t", 0, 0L)
+          KafkaTestKit.produce(c, "t", 0, Seq((null, "plain".getBytes(u8))), 1L)
+          KafkaTestKit.produce(c, "t", 0, recs, 2L, codec = codec)
+          val (back, hw, _) = KafkaWire.fetch(c, "t", 0, 0L)
           assert(hw == 5L && back.length == 5)
           assert(back.map(_.offset) == (0L to 4L))
           assert(new String(back(0).value, u8) == "plain")
@@ -319,13 +311,13 @@ class KafkaSinkFaultSpec extends SparkSuite {
     }
   }
 
-  for (bfmt <- brokerFormats) test(s"startingOffsets=latest: a fresh stream sees only post-start records (broker v$bfmt)") {
+  test("startingOffsets=latest: a fresh stream sees only post-start records (broker v2)") {
     import org.apache.spark.sql.streaming.Trigger
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
-        KafkaWire.produce(c, "t", 0, Seq(("old".getBytes(u8), "old".getBytes(u8))), 1L)
+        KafkaTestKit.produce(c, "t", 0, Seq(("old".getBytes(u8), "old".getBytes(u8))), 1L)
         val ckpt = java.nio.file.Files.createTempDirectory("lo-ckpt").toString
         val outDir = java.nio.file.Files.createTempDirectory("lo-out").toString
         def runOnce(): Unit = {
@@ -338,7 +330,7 @@ class KafkaSinkFaultSpec extends SparkSuite {
           q.processAllAvailable(); q.stop()
         }
         runOnce() // initial offset = latest: nothing to read
-        KafkaWire.produce(c, "t", 0, Seq(("new".getBytes(u8), "new".getBytes(u8))), 2L)
+        KafkaTestKit.produce(c, "t", 0, Seq(("new".getBytes(u8), "new".getBytes(u8))), 2L)
         runOnce() // resumes from the checkpoint, picks up only the new row
         val rows = spark.read.parquet(outDir).collect()
         assert(rows.map(_.getAs[String]("key")).toSeq == Seq("new"),
@@ -359,8 +351,8 @@ class KafkaSinkFaultSpec extends SparkSuite {
     assert(messages(err).exists(_.contains("startingOffsets must be")))
   }
 
-  for (bfmt <- brokerFormats) test(s"sink codec option: batches travel compressed and land intact (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("sink codec option: batches travel compressed and land intact (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       import spark.implicits._
       (1 to 30).map(i => (s"k$i", s"기사 내용 $i")).toDF("key", "value")
@@ -396,21 +388,21 @@ class KafkaSinkFaultSpec extends SparkSuite {
     assert(messages(err).exists(_.contains("codec must be")))
   }
 
-  for (bfmt <- brokerFormats) test(s"maxOffsetsPerTrigger: AvailableNow drains in rate-limited batches, exactly once (broker v$bfmt)") {
+  test("maxOffsetsPerTrigger: AvailableNow drains in rate-limited batches, exactly once (broker v2)") {
     import org.apache.spark.sql.streaming.Trigger
-    val srv = new MiniKafkaServer(numPartitions = 2, serveFormat = bfmt)
+    val srv = new MiniKafkaServer(numPartitions = 2)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
         (0 until 10).foreach { i =>
           val k = s"k$i".getBytes(u8)
-          KafkaWire.produce(c, "t", 0,
+          KafkaTestKit.produce(c, "t", 0,
             Seq((k, s"v$i".getBytes(u8))), 1L)
         }
         // spread a few records onto partition 1 so the proportional
         // allocation has two lags to split
         (10 until 14).foreach { i =>
-          KafkaWire.produce(c, "t", 1,
+          KafkaTestKit.produce(c, "t", 1,
             Seq((s"k$i".getBytes(u8), s"v$i".getBytes(u8))), 1L)
         }
         val outDir = java.nio.file.Files.createTempDirectory("mo-out").toString
@@ -435,20 +427,19 @@ class KafkaSinkFaultSpec extends SparkSuite {
     } finally srv.stop()
   }
 
-  for (bfmt <- brokerFormats)
-  test(s"minPartitions: one topic partition splits into N exactly-once scan tasks (broker v$bfmt)") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = bfmt)
+  test("minPartitions: one topic partition splits into N exactly-once scan tasks (broker v2)") {
+    val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
         (0 until 10).foreach { i =>
-          KafkaWire.produce(c, "t", 0,
+          KafkaTestKit.produce(c, "t", 0,
             Seq((s"k$i".getBytes(u8), s"v$i".getBytes(u8))), 1L)
         }
         // one compressed wrapper SPANNING the slice boundary: atomic on
         // the wire, so two adjacent slices both receive it and must
         // keep only their own offsets
-        KafkaWire.produce(c, "t", 0,
+        KafkaTestKit.produce(c, "t", 0,
           (10 until 15).map(i => (s"k$i".getBytes(u8), s"v$i".getBytes(u8))),
           2L, codec = KafkaWire.Codec.Gzip)
       } finally c.close()

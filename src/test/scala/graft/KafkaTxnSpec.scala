@@ -52,10 +52,10 @@ class KafkaTxnSpec extends SparkSuite {
         assert(srv.lastStable("t", 0) === 1L)
         val c = new KafkaWire.Conn("localhost", srv.port)
         try {
-          val (unc, hw, _) = KafkaWire.fetchV4Detailed(c, "t", 0, 0L)
+          val (unc, hw, _) = KafkaWire.fetch(c, "t", 0, 0L)
           assert(hw === 3L && unc.length === 3,
             "read_uncommitted sees in-flight transactional records")
-          val (com, lso, _) = KafkaWire.fetchV4Detailed(c, "t", 0, 0L,
+          val (com, lso, _) = KafkaWire.fetch(c, "t", 0, 0L,
             isolation = Isolation.ReadCommitted)
           assert(lso === 1L)
           assert(com.map(r => new String(r.key, u8)) === Seq("base"),
@@ -92,7 +92,7 @@ class KafkaTxnSpec extends SparkSuite {
       // read_uncommitted sees the aborted data but never the markers
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
-        val (unc, hw, _) = KafkaWire.fetchV4Detailed(c, "t", 0, 0L)
+        val (unc, hw, _) = KafkaWire.fetch(c, "t", 0, 0L)
         assert(hw === 5L)
         assert(unc.map(r => new String(r.key, u8)) ===
           Seq("dead1", "dead2", "live"))
@@ -213,7 +213,7 @@ class KafkaTxnSpec extends SparkSuite {
         def committedOffset(): Option[Long] =
           KafkaWire.fetchOffsets(c, "etl", "src", Seq(0))(0)
         def readSrcFrom(off: Long): Seq[KafkaWire.Record] =
-          KafkaWire.fetchV4(c, "src", 0, off)._1
+          KafkaWire.fetch(c, "src", 0, off)._1
         def transformAndStage(p: KafkaWire.RetryingProducer): Unit = {
           val from = committedOffset().getOrElse(0L)
           val recs = readSrcFrom(from)

@@ -2,72 +2,27 @@ package graft
 
 import graft.sources.KafkaWire
 
-/** Record-batch v2 (magic 2) on the wire: version negotiation against
-  * both broker generations, Produce v3 / Fetch v4 roundtrips with
-  * per-record timestamps and headers, broker down-conversion for old
-  * fetchers, and the idempotent producer — broker-side sequence dedup
+/** Record-batch v2 (magic 2) on the wire: Produce v3 / Fetch v9
+  * roundtrips with per-record timestamps and headers, compressed
+  * batches, and the idempotent producer — broker-side sequence dedup
   * that closes the post-append-drop duplicate WITHOUT the J1
   * absorber, plus epoch fencing of zombie producers.
   *
   * The reference's producer/consumer (collect/producer.py:26-29,
   * collect/consumer.py:152-159) run against a modern broker that
-  * negotiates exactly this format; these specs are the distance
-  * between "speaks the v1 parity subset" and "deployable against a
-  * >= 2.1 cluster". */
+  * speaks exactly this format. */
 class KafkaV2Spec extends SparkSuite {
 
   private val u8 = java.nio.charset.StandardCharsets.UTF_8
 
-  // ── version negotiation ─────────────────────────────────────────────
-
-  test("negotiation: a v2 broker yields format 2, a v1 broker format 1 — same client") {
-    for ((fmt, expect) <- Seq(2 -> 2, 1 -> 1)) {
-      val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = fmt)
-      try {
-        val c = new KafkaWire.Conn("localhost", srv.port)
-        try assert(KafkaWire.negotiateFormat(c) == expect,
-          s"serveFormat=$fmt broker must negotiate format $expect")
-        finally c.close()
-        val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t")
-        try {
-          assert(prod.recordFormat == expect)
-          prod.send(0, Seq(("k".getBytes(u8), "v".getBytes(u8))), 7L)
-        } finally prod.close()
-        assert(srv.storedBatchMagics("t", 0) == Seq(expect),
-          "the stored batch must carry the negotiated magic")
-      } finally srv.stop()
-    }
-  }
-
-  test("forced format=v1 against a v2 broker stays on magic 1; forced v2 against a v1 broker fails loudly") {
-    val v2srv = new MiniKafkaServer(numPartitions = 1)
-    try {
-      val prod = new KafkaWire.RetryingProducer("localhost", v2srv.port, "t",
-        format = "v1")
-      try prod.send(0, Seq((null, "v".getBytes(u8))), 1L) finally prod.close()
-      assert(v2srv.storedBatchMagics("t", 0) == Seq(1))
-    } finally v2srv.stop()
-    val v1srv = new MiniKafkaServer(numPartitions = 1, serveFormat = 1)
-    try {
-      val prod = new KafkaWire.RetryingProducer("localhost", v1srv.port, "t",
-        format = "v2")
-      try {
-        val err = intercept[IllegalArgumentException] {
-          prod.send(0, Seq((null, "v".getBytes(u8))), 1L)
-        }
-        assert(err.getMessage.contains("does not support record-batch v2"))
-      } finally prod.close()
-    } finally v1srv.stop()
-  }
-
   // ── v2 on the wire ──────────────────────────────────────────────────
 
-  test("produce v3 → fetch v4: per-record timestamps and headers survive the wire") {
+  test("produce v3 → fetch v9: per-record timestamps and headers survive the wire") {
     val srv = new MiniKafkaServer(numPartitions = 1)
     try {
       val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t")
       try {
-        // per-record timestamps + headers — fidelity v1 cannot carry
+        // per-record timestamps + headers
         prod.sendRecords(0, Seq(
           KafkaWire.Record(0L, 100L, "k1".getBytes(u8), "기사 1".getBytes(u8),
             Seq("traceId" -> "abc".getBytes(u8), "null-h" -> null)),
@@ -75,7 +30,7 @@ class KafkaV2Spec extends SparkSuite {
       } finally prod.close()
       val c = new KafkaWire.Conn("localhost", srv.port)
       try {
-        val (recs, hw) = KafkaWire.fetchV4(c, "t", 0, 0L)
+        val (recs, hw, _) = KafkaWire.fetch(c, "t", 0, 0L)
         assert(hw == 2L && recs.length == 2)
         assert(recs.map(_.offset) == Seq(0L, 1L))
         assert(recs.map(_.timestamp) == Seq(100L, 250L),
@@ -98,7 +53,6 @@ class KafkaV2Spec extends SparkSuite {
         try prod.send(0, (0 to 4).map(i =>
           (s"k$i".getBytes(u8), s"기사 본문 $i".getBytes(u8))), 9L, codec = codec)
         finally prod.close()
-        assert(srv.storedBatchMagics("t", 0) == Seq(2))
         assert(srv.storedBatchCodecs("t", 0) == Seq(codec))
         // a v2 batch is atomic: fetching from offset 2 serves the whole
         // batch; pollOnce must emit exactly 2..4 once
@@ -109,65 +63,6 @@ class KafkaV2Spec extends SparkSuite {
           Seq("k2", "k3", "k4"))
       } finally srv.stop()
     }
-  }
-
-  test("mixed-format log: v1 and v2 batches in one partition decode in one fetch") {
-    val srv = new MiniKafkaServer(numPartitions = 1)
-    try {
-      val c = new KafkaWire.Conn("localhost", srv.port)
-      try {
-        // old segment: a v1 produce (the parity path, still supported)
-        KafkaWire.produce(c, "t", 0,
-          Seq(("old".getBytes(u8), "v-old".getBytes(u8))), 1L)
-        // new segment: a v2 produce
-        val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t")
-        try prod.send(0, Seq(("new".getBytes(u8), "v-new".getBytes(u8))), 2L)
-        finally prod.close()
-        assert(srv.storedBatchMagics("t", 0) == Seq(1, 2))
-        // a v4 fetch serves BOTH as stored; the entry-offset-16 magic
-        // dispatch decodes the mix in one pass
-        val (recs, hw) = KafkaWire.fetchV4(c, "t", 0, 0L)
-        assert(hw == 2L)
-        assert(recs.map(r => new String(r.key, u8)) == Seq("old", "new"))
-        assert(recs.map(_.offset) == Seq(0L, 1L))
-      } finally c.close()
-    } finally srv.stop()
-  }
-
-  test("down-conversion: an old (fetch v2) consumer reads v2-stored batches — headers dropped, records intact") {
-    val srv = new MiniKafkaServer(numPartitions = 1)
-    try {
-      val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t")
-      try prod.sendRecords(0, Seq(
-        KafkaWire.Record(0L, 10L, "k1".getBytes(u8), "v1".getBytes(u8),
-          Seq("h" -> "x".getBytes(u8))),
-        KafkaWire.Record(0L, 20L, "k2".getBytes(u8), "v2".getBytes(u8))))
-      finally prod.close()
-      val c = new KafkaWire.Conn("localhost", srv.port)
-      try {
-        val (recs, hw) = KafkaWire.fetch(c, "t", 0, 0L) // the OLD fetch
-        assert(hw == 2L && recs.length == 2)
-        assert(recs.map(r => new String(r.key, u8)) == Seq("k1", "k2"))
-        assert(recs.map(_.timestamp) == Seq(10L, 20L),
-          "plain down-conversion keeps per-record timestamps")
-        assert(recs.forall(_.headers.isEmpty),
-          "v1 cannot carry headers — down-conversion drops them")
-      } finally c.close()
-    } finally srv.stop()
-  }
-
-  test("headers on a v1-negotiated producer fail loudly instead of being dropped silently") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = 1)
-    try {
-      val prod = new KafkaWire.RetryingProducer("localhost", srv.port, "t")
-      try {
-        val err = intercept[IllegalArgumentException] {
-          prod.sendRecords(0, Seq(KafkaWire.Record(0L, 1L,
-            "k".getBytes(u8), "v".getBytes(u8), Seq("h" -> Array[Byte](1)))))
-        }
-        assert(err.getMessage.contains("headers need record-batch v2"))
-      } finally prod.close()
-    } finally srv.stop()
   }
 
   // ── the idempotent producer ─────────────────────────────────────────
@@ -269,13 +164,9 @@ class KafkaV2Spec extends SparkSuite {
         .option("host", "localhost").option("port", srv.port.toString)
         .option("topic", "t").option("idempotent", "true")
         .mode("append").save()
-      // every stored batch negotiated magic 2 and carries a real pid
-      (0 until 2).foreach { p =>
-        assert(srv.storedBatchMagics("t", p).forall(_ == 2))
-      }
       val all = (0 until 2).flatMap(p => srv.stored("t", p))
       assert(all.length == 20)
-      // the source's negotiated fetch v4 reads the v2 batches back
+      // the source's fetch reads the v2 batches back
       val back = spark.read.format("graft-kafka")
         .option("host", "localhost").option("port", srv.port.toString)
         .option("topic", "t").load()
@@ -283,22 +174,6 @@ class KafkaV2Spec extends SparkSuite {
       assert(back.select("value").collect().map(_.getString(0)).toSet ==
         (1 to 20).map(i => s"기사 $i").toSet)
     } finally srv.stop()
-  }
-
-  test("sink rejects idempotent=true with format=v1 at plan time") {
-    import spark.implicits._
-    val err = intercept[Exception] {
-      Seq(("a", "b")).toDF("key", "value")
-        .write.format("graft-kafka")
-        .option("host", "localhost").option("port", "1")
-        .option("topic", "t").option("format", "v1")
-        .option("idempotent", "true")
-        .mode("append").save()
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(err).exists(_.contains("idempotent=true needs record-batch v2")))
   }
 
   test("headers round-trip the DSv2 halves: sink headers column -> broker -> includeHeaders read") {
@@ -335,40 +210,6 @@ class KafkaV2Spec extends SparkSuite {
         .option("topic", "t").load()
       assert(!plain.schema.fieldNames.contains("headers"))
     } finally srv.stop()
-  }
-
-  test("includeHeaders over a v1-format log reads empty header arrays, never nulls or failures") {
-    val srv = new MiniKafkaServer(numPartitions = 1, serveFormat = 1)
-    try {
-      val c = new KafkaWire.Conn("localhost", srv.port)
-      try KafkaWire.produce(c, "t", 0,
-        Seq(("k".getBytes(u8), "v".getBytes(u8))), 5L)
-      finally c.close()
-      val back = spark.read.format("graft-kafka")
-        .option("host", "localhost").option("port", srv.port.toString)
-        .option("topic", "t").option("includeHeaders", "true").load().collect()
-      assert(back.length === 1)
-      assert(back.head.getAs[scala.collection.Seq[Any]]("headers").isEmpty)
-    } finally srv.stop()
-  }
-
-  test("sink rejects a headers column with format=v1 at plan time") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("key", StringType), StructField("value", StringType),
-      StructField("headers", graft.sources.KafkaWireDataSource.headersType)))
-    val err = intercept[Exception] {
-      spark.createDataFrame(spark.sparkContext.parallelize(
-        Seq(Row("k", "v", null)), 1), schema)
-        .write.format("graft-kafka")
-        .option("host", "localhost").option("port", "1")
-        .option("topic", "t").option("format", "v1").mode("append").save()
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(err).exists(_.contains("headers column needs record-batch v2")))
   }
 
   test("startingTimestamp: the per-partition time lookup starts the read mid-log") {
@@ -479,39 +320,11 @@ class KafkaV2Spec extends SparkSuite {
         .option("host", "localhost").option("port", srv.port.toString)
         .option("topic", "t").option("codec", "lz4")
         .mode("append").save()
-      assert(srv.storedBatchMagics("t", 0) == Seq(2))
       assert(srv.storedBatchCodecs("t", 0) == Seq(KafkaWire.Codec.Lz4))
       val back = spark.read.format("graft-kafka")
         .option("host", "localhost").option("port", srv.port.toString)
         .option("topic", "t").load()
       assert(back.count() == 30L)
     } finally srv.stop()
-  }
-
-  test("a complete-but-empty v1 entry advances the decode cursor (never re-fetched or grown past)") {
-    // Hand-built: a v1 compressed wrapper whose inner set decoded to
-    // ZERO messages. No current broker path produces one (v1 brokers
-    // cannot host the control markers that make empty entries), but
-    // the cursor invariant must be FORMAT-INDEPENDENT: a complete
-    // entry always advances nextPos — the v1 wrapper's outer offset is
-    // the LAST consumed slot (the v1 convention), so the cursor lands
-    // one past it, exactly like the v2 branch's endOffset.
-    val empty = KafkaWire.encodeMessageSetCompressed(Seq.empty, 1L,
-      KafkaWire.Codec.Gzip)
-    // patch the outer offset (first 8 bytes) to a broker-assigned 41
-    (0 until 8).foreach(i => empty(i) = (41L >> (56 - 8 * i)).toByte)
-    val (recs, nextPos) = KafkaWire.decodeRecordSetDetailed(empty)
-    assert(recs.isEmpty)
-    assert(nextPos === 42L, "the empty entry's slot must be consumed")
-
-    // mixed: a plain entry BEFORE the empty wrapper — records decode
-    // and the cursor still ends after the empty entry's slot
-    val u8 = java.nio.charset.StandardCharsets.UTF_8
-    val plain = KafkaWire.encodeMessageSetAt(Seq(
-      KafkaWire.Record(40L, 1L, "k".getBytes(u8), "v".getBytes(u8))))
-    val both = plain ++ empty
-    val (recs2, nextPos2) = KafkaWire.decodeRecordSetDetailed(both)
-    assert(recs2.map(_.offset) === Seq(40L))
-    assert(nextPos2 === 42L)
   }
 }

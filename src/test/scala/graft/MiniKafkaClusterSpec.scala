@@ -26,11 +26,11 @@ class MiniKafkaClusterSpec extends SparkSuite {
         // leadership spreads round-robin
         assert(view.leaders === Map(0 -> 0, 1 -> 1, 2 -> 0, 3 -> 1))
         // the bootstrap broker (0) leads p0: direct produce works
-        KafkaWire.produce(boot, "t", 0,
+        KafkaTestKit.produce(boot, "t", 0,
           Seq(("k".getBytes(u8), "v".getBytes(u8))), 1L)
         // ...but REFUSES p1's data path, loudly and typed
         intercept[KafkaWire.NotLeaderException] {
-          KafkaWire.produce(boot, "t", 1,
+          KafkaTestKit.produce(boot, "t", 1,
             Seq(("k".getBytes(u8), "v".getBytes(u8))), 1L)
         }
         intercept[KafkaWire.NotLeaderException] {
@@ -49,9 +49,9 @@ class MiniKafkaClusterSpec extends SparkSuite {
         // the leader itself serves p1
         val c1 = KafkaWire.leaderConn("localhost", cl.bootstrapPort, "t", 1)
         try {
-          KafkaWire.produce(c1, "t", 1,
+          KafkaTestKit.produce(c1, "t", 1,
             Seq(("k1".getBytes(u8), "v1".getBytes(u8))), 1L)
-          val (recs, _) = KafkaWire.fetch(c1, "t", 1, 0L)
+          val (recs, _, _) = KafkaWire.fetch(c1, "t", 1, 0L)
           assert(recs.map(r => new String(r.key, u8)) === Seq("k1"))
         } finally c1.close()
       } finally boot.close()

@@ -100,7 +100,7 @@ object PullReplicationChaosProperties
         val c = new KafkaWire.Conn("localhost", lp)
         try {
           while (!done) {
-            val (recs, wm, nextPos) = KafkaWire.fetchV9Detailed(c, topic,
+            val (recs, wm, nextPos) = KafkaWire.fetch(c, topic,
               P, off, currentLeaderEpoch = epoch)
             if (recs.isEmpty) done = true
             else {

@@ -100,7 +100,7 @@ object ReplicationChaosProperties extends Properties("graft.replchaos") {
           val c = KafkaWire.leaderConn("localhost", liveBootstrap, topic, P)
           try {
             try {
-              KafkaWire.produce(c, topic, P,
+              KafkaTestKit.produce(c, topic, P,
                 vals.map(v => (v.getBytes(u8), v.getBytes(u8))), 1L,
                 acks = acks)
               if (acks == -1) durable ++= vals
@@ -238,7 +238,7 @@ object ReplicationChaosProperties extends Properties("graft.replchaos") {
             try {
               val c = KafkaWire.leaderConn("localhost", bootstrap, topic, P)
               try {
-                KafkaWire.produce(c, topic, P,
+                KafkaTestKit.produce(c, topic, P,
                   vals.map(v => (v.getBytes(u8), v.getBytes(u8))), 1L,
                   acks = acks)
                 return true

@@ -22,7 +22,7 @@ import graft.sources.KafkaWire.PartitionRegime
   *    acked-durable record;
   *  - a crashed broker restarts EMPTY (in-memory logs die with the
   *    process) and resyncs over the wire — catch-up is observable by
-  *    the leader re-admitting it to the ISR in Metadata v7.
+  *    the leader re-admitting it to the ISR in Metadata.
   *
   * Invariants, asserted at every step: acked-durable survival (every
   * acks=all-acked value is served, in order, by whoever currently
@@ -83,7 +83,7 @@ class ReplicationCrossProcessSpec extends org.scalatest.funsuite.AnyFunSuite {
     var off = 0L; var done = false
     while (!done) {
       val (recs, wm, nextPos) =
-        KafkaWire.fetchV9Detailed(c, topic, p, off,
+        KafkaWire.fetch(c, topic, p, off,
           currentLeaderEpoch = epoch)
       if (recs.isEmpty) done = true
       else {
@@ -150,7 +150,7 @@ class ReplicationCrossProcessSpec extends org.scalatest.funsuite.AnyFunSuite {
       // fetcher re-admits itself by catching up, so this settles
       eventually() {
         withConn(port0)(c =>
-          KafkaWire.clusterMetadataV7(c, topic).isr(0).toSet == Set(0, 1))
+          KafkaWire.clusterMetadata(c, topic).isr(0).toSet == Set(0, 1))
       }
 
       // ── the leader PROCESS crashes (no shutdown hook, no cleanup) ──
@@ -172,7 +172,7 @@ class ReplicationCrossProcessSpec extends org.scalatest.funsuite.AnyFunSuite {
       // in-JVM election monitor's stale-leader check
       withConn(port1) { c =>
         intercept[KafkaWire.FencedLeaderEpochException] {
-          KafkaWire.fetchV9Detailed(c, topic, 0, 0L, currentLeaderEpoch = 1)
+          KafkaWire.fetch(c, topic, 0, 0L, currentLeaderEpoch = 1)
         }
       }
 
@@ -198,10 +198,10 @@ class ReplicationCrossProcessSpec extends org.scalatest.funsuite.AnyFunSuite {
       withConn(port1)(c => KafkaWire.leaderAndIsr(c, 2, r2b, live(port0b)))
 
       // catch-up is OBSERVABLE: the leader re-admits the replica to
-      // the ISR (Metadata v7) once its fetch offsets reach the end
+      // the ISR (Metadata) once its fetch offsets reach the end
       eventually() {
         withConn(port1)(c =>
-          KafkaWire.clusterMetadataV7(c, topic).isr(0).contains(0))
+          KafkaWire.clusterMetadata(c, topic).isr(0).contains(0))
       }
 
       // promote the resynced replica (epoch 3): the ENTIRE history —
@@ -216,7 +216,7 @@ class ReplicationCrossProcessSpec extends org.scalatest.funsuite.AnyFunSuite {
       // and the deposed broker 1 now refuses the data path outright
       withConn(port1) { c =>
         intercept[KafkaWire.NotLeaderException] {
-          KafkaWire.fetchV9Detailed(c, topic, 0, 0L)
+          KafkaWire.fetch(c, topic, 0, 0L)
         }
       }
     } finally {
@@ -256,7 +256,7 @@ class ReplicationCrossProcessSpec extends org.scalatest.funsuite.AnyFunSuite {
         val lp = portOf(leader)
         eventually() {
           withConn(lp)(c =>
-            KafkaWire.clusterMetadataV7(c, topic).isr(0).toSet == Set(0, 1))
+            KafkaWire.clusterMetadata(c, topic).isr(0).toSet == Set(0, 1))
         }
         val prod = new KafkaWire.RetryingProducer("localhost", lp, topic,
           idempotent = true, acks = "all")
@@ -269,7 +269,7 @@ class ReplicationCrossProcessSpec extends org.scalatest.funsuite.AnyFunSuite {
         // the survivor must be in-sync at crash time (see test 1)
         eventually() {
           withConn(lp)(c =>
-            KafkaWire.clusterMetadataV7(c, topic).isr(0).toSet == Set(0, 1))
+            KafkaWire.clusterMetadata(c, topic).isr(0).toSet == Set(0, 1))
         }
 
         // crash the leader; promote the survivor; verify; revive

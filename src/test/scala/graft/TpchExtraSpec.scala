@@ -135,6 +135,34 @@ class TpchExtraSpec extends SparkSuite {
       5L -> 5L, 6L -> 5L, 8L -> 8L, 9L -> 8L))
   }
 
+  test("a corpus with no near-duplicate pair has no duplicate clusters and purges nothing") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("cc-none").toString
+    // 12 documents over disjoint vocabularies: no LSH band collides
+    (0 until 12).map { i =>
+      val words = (0 until 40).map(j => s"w${i}x$j").mkString(" ")
+      (i.toLong, words, "en", "web", words.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$dir/documents.dir")
+    val part = new java.io.File(s"$dir/documents.dir").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath,
+      java.nio.file.Paths.get(s"$dir/documents.parquet"))
+    val prefix = dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    try {
+      def q(name: String) = SparkEntry.queries(name)(spark, dir)
+      assert(q("dedup_cc_clusters").count() == 0L)
+      assert(q("dedup_cc_purge").collect()
+        .map(_.getAs[Long]("n_docs")).sum == 12L)
+    } finally {
+      Option(new java.io.File("/tmp/graft-artifact-cache").listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.startsWith(prefix))
+        .foreach(f => org.apache.commons.io.FileUtils.deleteDirectory(f))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("dedup_cc_purge drops exactly the non-canonical cluster members") {
     val kept = run("dedup_cc_purge").collect()
       .map(_.getAs[Long]("n_docs")).sum

@@ -3,19 +3,17 @@ package graft
 import graft.sources.KafkaWire
 import org.scalacheck.{Gen, Prop, Properties}
 
-/** Randomized roundtrip of the message-format-v1 codec battery:
+/** Randomized roundtrip of the record-batch v2 codec battery:
   * arbitrary key/value byte arrays (nulls included, any bytes — not
-  * just UTF-8), any record count, any broker-assigned wrapper offset,
-  * through each compression path (none / gzip / snappy / lz4) and the
-  * plain encoder. Pins three contracts at once:
+  * just UTF-8), any record count, any broker-assigned base offset,
+  * through each compression path (none / gzip / snappy / lz4). Pins
+  * three contracts at once:
   *
-  *  - CONTENT: keys, values, and null-ness survive encode → (compress
-  *    → wrap → decompress) → decode byte-exactly, under CRC32
-  *    verification per record;
-  *  - OFFSETS: the v1 wrapper convention (wrapper offset = absolute of
-  *    the LAST inner message, inner offsets relative 0..n-1)
-  *    reconstructs contiguous absolutes ending at the wrapper offset,
-  *    for any assigned offset;
+  *  - CONTENT: keys, values, headers, per-record timestamps and
+  *    null-ness survive encode → (compress → decompress) → decode
+  *    byte-exactly, under CRC32C verification per batch;
+  *  - OFFSETS: relative deltas reconstruct the absolute offsets for
+  *    any assigned base;
   *  - TRUNCATION: slicing the encoded set at any byte boundary never
   *    throws and never fabricates records — the decoder returns a
   *    prefix of the full decode (the grow-on-truncation recovery's
@@ -29,11 +27,6 @@ object WireCodecProperties extends Properties("graft.wirecodec") {
       Gen.listOfN(n, Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
         .map(_.toArray)))
 
-  private val recordsGen: Gen[List[(Array[Byte], Array[Byte])]] = for {
-    n <- Gen.chooseNum(1, 20)
-    recs <- Gen.listOfN(n, Gen.zip(bytesGen, bytesGen))
-  } yield recs
-
   private def sameBytes(a: Array[Byte], b: Array[Byte]): Boolean =
     (a == null && b == null) ||
       (a != null && b != null && java.util.Arrays.equals(a, b))
@@ -41,63 +34,12 @@ object WireCodecProperties extends Properties("graft.wirecodec") {
   private val codecs = Seq(KafkaWire.Codec.Gzip, KafkaWire.Codec.Snappy,
     KafkaWire.Codec.Lz4)
 
-  property("compressed wrapper roundtrip: content, nulls, and absolute offsets") =
-    Prop.forAll(recordsGen, Gen.chooseNum(0L, Long.MaxValue / 2),
-        Gen.oneOf(codecs)) { (recs, lastOffset, codec) =>
-      val ts = 12345L
-      val set = KafkaWire.encodeMessageSetCompressed(recs, ts, codec)
-      // the broker assigns the wrapper's offset to the LAST inner
-      // message: patch the first 8 bytes the way a broker serves it
-      val wrapperOffset = lastOffset
-      var i = 0
-      while (i < 8) { set(i) = (wrapperOffset >> (56 - 8 * i)).toByte; i += 1 }
-      val out = KafkaWire.decodeMessageSet(set)
-      val offsetsOk = out.map(_.offset) ==
-        ((wrapperOffset - recs.length + 1) to wrapperOffset)
-      val contentOk = out.length == recs.length && out.zip(recs).forall {
-        case (r, (k, v)) => sameBytes(r.key, k) && sameBytes(r.value, v)
-      }
-      offsetsOk && contentOk && out.forall(_.timestamp == ts)
-    }
-
-  property("plain set roundtrip with explicit absolute offsets") =
-    Prop.forAll(recordsGen, Gen.chooseNum(0L, Long.MaxValue / 2)) {
-      (recs, base) =>
-        val stored = recs.zipWithIndex.map { case ((k, v), i) =>
-          KafkaWire.Record(base + i, 7L, k, v)
-        }
-        val out = KafkaWire.decodeMessageSet(
-          KafkaWire.encodeMessageSetAt(stored))
-        out.length == recs.length && out.zip(stored).forall { case (a, b) =>
-          a.offset == b.offset && sameBytes(a.key, b.key) &&
-            sameBytes(a.value, b.value)
-        }
-    }
-
-  property("truncation at any byte yields a clean prefix, never garbage") =
-    Prop.forAll(recordsGen) { recs =>
-      val set = KafkaWire.encodeMessageSet(recs, 3L)
-      val full = KafkaWire.decodeMessageSet(set)
-      Prop.forAll(Gen.chooseNum(0, set.length)) { cut =>
-        val sliced = java.util.Arrays.copyOf(set, cut)
-        val out = KafkaWire.decodeMessageSet(sliced)
-        // a prefix of the full decode — record for record
-        out.length <= full.length && out.zip(full).forall { case (a, b) =>
-          a.offset == b.offset && sameBytes(a.key, b.key) &&
-            sameBytes(a.value, b.value)
-        }
-      }
-    }
-
-  // ── record batch v2 (magic 2) ───────────────────────────────────────
-
   private val headerGen: Gen[(String, Array[Byte])] = for {
     k <- Gen.alphaNumStr.map(_.take(12))
     v <- bytesGen
   } yield (k, v)
 
-  /** v2 records: per-record timestamps and headers — the fidelity v1
-    * cannot carry. */
+  /** v2 records: per-record timestamps and headers. */
   private val v2RecordsGen: Gen[List[KafkaWire.Record]] = for {
     n <- Gen.chooseNum(1, 20)
     baseTs <- Gen.chooseNum(0L, 1L << 41)
@@ -127,7 +69,7 @@ object WireCodecProperties extends Properties("graft.wirecodec") {
       val rebased = recs.map(r => r.copy(offset = base + r.offset))
       val batch = KafkaWire.encodeRecordBatch(base, rebased, codec,
         producerId = 77L, producerEpoch = 3, baseSequence = 41)
-      val out = KafkaWire.decodeRecordSet(batch)
+      val (out, _) = KafkaWire.decodeRecordSet(batch)
       val meta = KafkaWire.decodeRecordBatches(batch)
       out.length == recs.length &&
         meta.length == 1 && meta.head.producerId == 77L &&
@@ -149,9 +91,10 @@ object WireCodecProperties extends Properties("graft.wirecodec") {
         val b = KafkaWire.encodeRecordBatch(recsA.length.toLong,
           recsB.map(r => r.copy(offset = recsA.length + r.offset)), codec)
         val set = a ++ b
-        val full = KafkaWire.decodeRecordSet(set)
+        val (full, _) = KafkaWire.decodeRecordSet(set)
         Prop.forAll(Gen.chooseNum(0, set.length)) { cut =>
-          val out = KafkaWire.decodeRecordSet(java.util.Arrays.copyOf(set, cut))
+          val (out, _) =
+            KafkaWire.decodeRecordSet(java.util.Arrays.copyOf(set, cut))
           // batches are atomic: a cut decodes to 0, |A| or |A|+|B| records
           (out.length == 0 || out.length == recsA.length ||
             out.length == full.length) &&
@@ -194,18 +137,6 @@ object WireCodecProperties extends Properties("graft.wirecodec") {
           b.producerEpoch == epoch && b.baseOffset == off &&
           b.endOffset == off + 1 &&
           key.int16() == (if (commit) 1 else 0)
-    }
-
-  property("mixed-format set: v1 entries and v2 batches decode in one pass") =
-    Prop.forAll(recordsGen, v2RecordsGen) { (v1recs, v2recs) =>
-      val v1 = KafkaWire.encodeMessageSetAt(
-        v1recs.zipWithIndex.map { case ((k, v), i) =>
-          KafkaWire.Record(i.toLong, 5L, k, v) })
-      val v2 = KafkaWire.encodeRecordBatch(v1recs.length.toLong,
-        v2recs.map(r => r.copy(offset = v1recs.length + r.offset)))
-      val out = KafkaWire.decodeRecordSet(v1 ++ v2)
-      out.length == v1recs.length + v2recs.length &&
-        out.map(_.offset) == (0L until out.length.toLong)
     }
 
   // ── KIP-482 flexible encodings (r16 directive #6) ──────────────────
