@@ -30,36 +30,21 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Artifact roots whose published markers define cold/warm state. */
-  private val ArtifactRoots = Seq(
-    "/tmp/graft-artifact-cache", "/tmp/graft-postings-cache",
-    "/tmp/graft-ivf-cache", "/tmp/graft-incpostings-cache")
-
-  /** Published-artifact markers currently on disk, as compact labels
-    * (parent-dir name with fingerprint digit runs collapsed). A query
-    * that ADDS one paid that build — its timing is a cold number. */
+  /** Published artifacts currently on disk, as compact labels (the
+    * store-relative artifact dir with fingerprint digit runs
+    * collapsed): one per `_GRAFT_DONE` marker, so each built artifact
+    * counts once. A query that ADDS one paid that build — its timing
+    * is a cold number. The label keeps the corpus-identifying root, or
+    * two corpora's same-named artifacts would collapse to one entry
+    * and a rebuild would hide behind the other's marker. */
   private def artifactState(): Set[String] = {
-    def walk(f: java.io.File, depth: Int): Seq[java.io.File] =
-      if (!f.exists()) Seq.empty
-      else if (f.isFile) {
-        if (f.getName == "_GRAFT_DONE" || f.getName == "CURRENT") Seq(f)
-        else Seq.empty
-      } else if (depth <= 0) Seq.empty
-      else Option(f.listFiles()).getOrElse(Array.empty).toSeq
-        .flatMap(walk(_, depth - 1))
-    ArtifactRoots.flatMap { r =>
-      walk(new java.io.File(r), 4).map { m =>
-        val owner = m.getParentFile
-        val root = new java.io.File(r).getName
-          .stripPrefix("graft-").stripSuffix("-cache")
-        // Label = ROOT-RELATIVE owner path (digit runs collapsed): the
-        // corpus-identifying parent dir must stay in the label, or two
-        // corpora's same-named artifacts collapse to one set entry and
-        // a rebuild hides behind the other's marker.
-        val rel = owner.getPath.stripPrefix(r).stripPrefix("/")
-        s"$root:${rel.replaceAll("[0-9]{6,}", "#")}"
-      }
-    }.toSet
+    def ls(f: java.io.File) = Option(f.listFiles()).getOrElse(Array.empty).toSeq
+    (for {
+      root <- ls(new java.io.File(operators.ArtifactCache.Root))
+      artifact <- ls(root)
+      if new java.io.File(artifact, operators.ArtifactCache.Done).exists()
+    } yield s"artifact:${root.getName}/${artifact.getName}"
+      .replaceAll("[0-9]{6,}", "#")).toSet
   }
 
   def main(args: Array[String]): Unit = {

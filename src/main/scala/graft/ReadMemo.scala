@@ -25,19 +25,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * appends that keep mtime — not a pattern this repo has) must keep
   * calling `read.parquet` directly.
   *
-  * Entries of stopped sessions are evicted on access (the cbCache
-  * pattern), so a long-lived JVM running many sessions cannot leak. */
+  * Entries live in a [[SessionMemo]], so a long-lived JVM running
+  * many sessions cannot leak. */
 object ReadMemo {
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String),
-      (SparkSession, DataFrame)]
+  private val memo = new SessionMemo[(String, String), DataFrame]
 
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    memo.filterInPlace((_, v) => !v._1.sparkContext.isStopped)
     val f = new java.io.File(path)
-    val fp = s"${f.length()}-${f.lastModified()}"
-    memo.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(spark), path, fp),
-      (spark, spark.read.parquet(path)))._2
+    memo(spark, (path, s"${f.length()}-${f.lastModified()}"))(
+      spark.read.parquet(path))
   }
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * manifest, so an increment costs one delta-sized build and a
   * metadata commit while probes stay corpus-size-independent.
   *
-  * Storage layout (one root per corpus generation, content-fingerprint
-  * keyed like [[PostingsIndex]]):
+  * Storage layout (one root per corpus generation, published as an
+  * [[ArtifactCache]] directory):
   *
   *   segments/seg-00001-ab12cd34/   (doc_id, g) postings  — immutable
   *   segments/seg-00002-9f0e1d2c/   delta postings        — immutable
@@ -585,24 +585,19 @@ object IncPostings {
         (col("doc_id") % 97 =!= 0 && col("doc_id") % 31 === 0))
       .select(col("doc_id"))
 
-  // ── memoized on-disk index per corpus generation ───────────────────
-
-  private val built =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
+  // ── build-once index roots per corpus generation ───────────────────
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Build-once index root for `dir` (fingerprint-keyed, stale-
-    * generation eviction — the PostingsIndex.indexPath protocol),
-    * parameterized by index `kind` and its row builder so the trigram
-    * and positional timelines share one cache protocol. The build runs
-    * the whole timeline: base commit over v1, then the delta commit;
-    * per-phase wall times are logged so the decade tables can
-    * attribute base vs delta cost. */
+  /** Build-once index root for `dir`, parameterized by index `kind`
+    * and its row builder so the trigram and positional timelines share
+    * one build sequence. The build runs the whole timeline: base
+    * commit over v1, then the delta commit; per-phase wall times are
+    * logged so the decade tables can attribute base vs delta cost. */
   private def indexRoot(s: SparkSession, dir: String, kind: String,
       rowsOf: DataFrame => DataFrame,
       shift: Long = Maintenance.AddShift): java.io.File =
-    cachedRoot(s, dir, kind) { root =>
+    lsmArtifact(s, dir, kind) { root =>
       val docs = Tables(s, dir, "documents")
       val t0 = System.nanoTime()
       commitBase(root, rowsOf(docs))
@@ -614,42 +609,16 @@ object IncPostings {
         f"delta build+commit ${(t2 - t1) / 1e9}%.2f s")
     }
 
-  /** The shared build-once cache protocol (fingerprint-keyed root +
-    * stale-sibling eviction + done marker), factored out so timelines
-    * with different build sequences (the standard base+delta above,
-    * the full lifecycle below) share it. `src` names the corpus table
-    * the fingerprint tracks — the text kinds key on `documents`, the
-    * vector kind ([[IvfIndex]]'s `ivfvec`) on `embeddings`. */
-  private[graft] def cachedRoot(s: SparkSession, dir: String,
+  /** An LSM timeline root published through [[ArtifactCache]] as the
+    * artifact `lsm-<kind>`: `buildAt` runs the timeline's commits in a
+    * fresh directory, and the root is read-only once returned. `src`
+    * names the corpus table the fingerprint tracks — the text kinds
+    * key on `documents`, the vector kinds ([[IvfIndex]]'s `ivfvec*`)
+    * on `embeddings`. */
+  private[graft] def lsmArtifact(s: SparkSession, dir: String,
       kind: String, src: String = "documents")(
-      buildAt: java.io.File => Unit): java.io.File = {
-    val f = new java.io.File(s"$dir/$src.parquet")
-    val fp = s"${f.length()}-${f.lastModified()}"
-    val path = built.getOrElseUpdate((dir, kind, fp), {
-      val prefix = s"${dir.replaceAll("[^A-Za-z0-9._-]", "_")}-$kind-"
-      val root = new java.io.File("/tmp/graft-incpostings-cache", prefix + fp)
-      val marker = new java.io.File(root, "_GRAFT_DONE")
-      if (!marker.exists()) {
-        val hfs = org.apache.hadoop.fs.FileSystem.getLocal(
-          s.sparkContext.hadoopConfiguration)
-        // Evict OLDER corpus generations of THIS kind only: the text
-        // after the prefix must be a bare length-mtime fingerprint, or
-        // kind `ivfvec` would sweep `ivfvec-lifecycle-<fp>` roots —
-        // the same prefix-collision the IvfIndex.evictStaleSiblings
-        // bare-fingerprint rule guards against.
-        Option(root.getParentFile.listFiles()).getOrElse(Array.empty)
-          .filter(x => x.getName.startsWith(prefix) && x.getName != root.getName &&
-            x.getName.stripPrefix(prefix).matches("\\d+-\\d+"))
-          .foreach(x => hfs.delete(new org.apache.hadoop.fs.Path(x.toString), true))
-        if (root.exists()) // half-written timeline from a killed run
-          hfs.delete(new org.apache.hadoop.fs.Path(root.toString), true)
-        buildAt(root)
-        marker.createNewFile()
-      }
-      root.toString
-    })
-    new java.io.File(path)
-  }
+      buildAt: java.io.File => Unit): java.io.File =
+    ArtifactCache.dir(s, dir, s"lsm-$kind", Seq(src))(buildAt)
 
   /** The full index lifecycle as ONE artifact (r11 verdict #4):
     * base commit over v1 → snapshot-diff delta commit → pre-retention
@@ -660,7 +629,7 @@ object IncPostings {
     * retention sweeping a live segment) fails the hash GATE, not just
     * a spec. */
   private def lifecycleRoot(s: SparkSession, dir: String): java.io.File =
-    cachedRoot(s, dir, "lifecycle") { root =>
+    lsmArtifact(s, dir, "lifecycle") { root =>
       val docs = Tables(s, dir, "documents")
       commitBase(root, TextOps.trigramRowsOf(docs))
       commitDelta(root, TextOps.trigramRowsOf(
@@ -669,7 +638,7 @@ object IncPostings {
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(root, "probe-before").toString)
       compact(s, root)
-      // graceMs = 0: the cachedRoot build is single-writer by
+      // graceMs = 0: the artifact build is single-writer by
       // construction, so immediate reclamation is provably safe (and
       // the query's n_gens_retained/probe checks want the terminal
       // retained state, not a grace-deferred one).
@@ -730,7 +699,7 @@ object IncPostings {
     * oracle (merge-on-read == full build, persisted). */
   private[operators] def v1SplitRoot(s: SparkSession, dir: String,
       kind: String, rowsOf: DataFrame => DataFrame): java.io.File =
-    cachedRoot(s, dir, kind) { root =>
+    lsmArtifact(s, dir, kind) { root =>
       val docs = Tables(s, dir, "documents")
       val isBase = col("doc_id") % 5 =!= 0
       commitBase(root, rowsOf(docs.where(isBase)))
@@ -785,7 +754,7 @@ object IncPostings {
     * rather than re-minhashing the corpus; the DELTA commit minhashes
     * only the arrivals (delta-sized). */
   private def lshBandRoot(s: SparkSession, dir: String): java.io.File =
-    cachedRoot(s, dir, "lshband") { root =>
+    lsmArtifact(s, dir, "lshband") { root =>
       val docs = Tables(s, dir, "documents")
       commitBase(root, Dedup.bandRows(s, dir))
       commitDelta(root, lshBandRowsOf(deltaDocs(docs, Maintenance.AddShift)),

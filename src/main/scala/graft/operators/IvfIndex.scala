@@ -393,53 +393,17 @@ object IvfIndex {
 
   // ---- inventory surface --------------------------------------------------
 
-  // In-JVM memo so one session resolves the on-disk index once.
-  private val builtIdx = scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  /** Cheap content fingerprint — regenerated testdata (new
-    * mtime/length) invalidates the on-disk index automatically (same
-    * convention as PostingsIndex). */
-  private def corpusFingerprint(dir: String): String = {
-    val f = new java.io.File(s"$dir/embeddings.parquet")
-    s"${f.length()}-${f.lastModified()}"
-  }
+  /** A build-once IVF artifact over `dir`'s embeddings: the versioned
+    * index `buildAt` lays out, published through [[ArtifactCache]]. */
+  private def persisted(s: SparkSession, dir: String, name: String)(
+      buildAt: String => Unit): String =
+    ArtifactCache.dir(s, dir, name, Seq("embeddings"))(d => buildAt(d.toString))
+      .toString
 
   /** Deterministic on-disk versioned index for `dir` — build-once /
-    * search-many ACROSS sessions, mirroring PostingsIndex.indexPath.
-    * The CURRENT pointer doubles as the completion marker: build()
-    * writes it only after the generation is fully on disk, so a killed
-    * build leaves no pointer and the next caller rewrites the
-    * generation (SaveMode.Overwrite) instead of serving a torso. */
-  def persistedPath(s: SparkSession, dir: String): String = {
-    val fp = corpusFingerprint(dir)
-    builtIdx.getOrElseUpdate((fp, dir), {
-      val prefix = s"${dir.replaceAll("[^A-Za-z0-9._-]", "_")}-"
-      val root = new java.io.File("/tmp/graft-ivf-cache", prefix + fp)
-      val path = root.toString
-      if (currentVersion(s, path).isEmpty) {
-        evictStaleSiblings(s, root, prefix)
-        build(s, Tables(s, dir, "embeddings"), path)
-      }
-      path
-    })
-  }
-
-  /** Evict on-disk indexes of OLDER corpus generations only: siblings
-    * whose name is `prefix` + a bare `length-mtime` fingerprint. The
-    * bare-fingerprint requirement keeps kinds disjoint — the base
-    * root's `<dir>-` prefix must not match the incremental root
-    * `<dir>-inc-<fp>` (its remainder `inc-<fp>` is not a bare
-    * fingerprint), or a cold base build would delete the just-built
-    * current-generation incremental index. */
-  private[graft] def evictStaleSiblings(s: SparkSession, root: java.io.File,
-      prefix: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      s.sparkContext.hadoopConfiguration)
-    Option(root.getParentFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(prefix) && f.getName != root.getName &&
-        f.getName.stripPrefix(prefix).matches("\\d+-\\d+"))
-      .foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f.toString), true))
-  }
+    * search-many ACROSS sessions. */
+  def persistedPath(s: SparkSession, dir: String): String =
+    persisted(s, dir, "ivf-full")(build(s, Tables(s, dir, "embeddings"), _))
 
   /** The simulated continuous-ingest split for the ORACLED incremental
     * timeline: residue-19 vec_ids are the "arrivals" appended after the
@@ -451,25 +415,16 @@ object IvfIndex {
   /** Build-once incremental index for `dir`: codebook trained on the
     * base (pre-arrival) vectors only, arrivals appended to the live
     * generation through [[append]] — the frozen-codebook ingest path,
-    * persisted under its own kind-keyed root beside [[persistedPath]].
+    * published as its own artifact beside [[persistedPath]].
     * Because assignment is deterministic in (codebook, vector), the
     * result is bit-identical to a same-codebook build over the union —
     * which is exactly what the oracle recomputes. */
-  def incPersistedPath(s: SparkSession, dir: String): String = {
-    val fp = corpusFingerprint(dir)
-    builtIdx.getOrElseUpdate((fp, s"$dir#inc"), {
-      val prefix = s"${dir.replaceAll("[^A-Za-z0-9._-]", "_")}-inc-"
-      val root = new java.io.File("/tmp/graft-ivf-cache", prefix + fp)
-      val path = root.toString
-      if (currentVersion(s, path).isEmpty) {
-        evictStaleSiblings(s, root, prefix)
-        val e = Tables(s, dir, "embeddings")
-        build(s, e.where(not(expr(IncArrivalsWhere))), path)
-        append(s, path, e.where(expr(IncArrivalsWhere)))
-      }
-      path
-    })
-  }
+  def incPersistedPath(s: SparkSession, dir: String): String =
+    persisted(s, dir, "ivf-inc") { path =>
+      val e = Tables(s, dir, "embeddings")
+      build(s, e.where(not(expr(IncArrivalsWhere))), path)
+      append(s, path, e.where(expr(IncArrivalsWhere)))
+    }
 
   /** The simulated DRIFT cohort for the ORACLED retrain timeline: a
     * third of the corpus (residue-3 vec_ids) re-arrives shifted +10.0
@@ -505,23 +460,14 @@ object IvfIndex {
     * union. Search over it is oracled end to end: the DuckDB twin
     * trains on the same union, so a hash match certifies both the
     * trigger and the post-retrain search semantics. */
-  def retrainPersistedPath(s: SparkSession, dir: String): String = {
-    val fp = corpusFingerprint(dir)
-    builtIdx.getOrElseUpdate((fp, s"$dir#retrain"), {
-      val prefix = s"${dir.replaceAll("[^A-Za-z0-9._-]", "_")}-retrain-"
-      val root = new java.io.File("/tmp/graft-ivf-cache", prefix + fp)
-      val path = root.toString
-      if (currentVersion(s, path).isEmpty) {
-        evictStaleSiblings(s, root, prefix)
-        val e = Tables(s, dir, "embeddings")
-        build(s, e.where(not(expr(RetrainArrivalsWhere))), path)
-        val retrained = appendOrRetrain(s, path, retrainArrivals(e))
-        require(retrained,
-          s"skewed arrival batch must trip the retrain policy at $dir")
-      }
-      path
-    })
-  }
+  def retrainPersistedPath(s: SparkSession, dir: String): String =
+    persisted(s, dir, "ivf-retrain") { path =>
+      val e = Tables(s, dir, "embeddings")
+      build(s, e.where(not(expr(RetrainArrivalsWhere))), path)
+      val retrained = appendOrRetrain(s, path, retrainArrivals(e))
+      require(retrained,
+        s"skewed arrival batch must trip the retrain policy at $dir")
+    }
 
   // ---- the LSM vector timeline (kind `ivfvec`) ----------------------------
 
@@ -587,7 +533,7 @@ object IvfIndex {
     * engine's last index family (trigram / positional / BM25 /
     * lshband / vectors) onto ONE maintenance protocol. */
   private[graft] def lsmRoot(s: SparkSession, dir: String): java.io.File =
-    IncPostings.cachedRoot(s, dir, "ivfvec", src = "embeddings") { root =>
+    IncPostings.lsmArtifact(s, dir, "ivfvec", src = "embeddings") { root =>
       val e = Tables(s, dir, "embeddings")
       // the session-memoized v1 codebook — sim_ivf_*, the lifecycle and
       // the retrain timeline all train on the same corpus; one training
@@ -676,7 +622,7 @@ object IvfIndex {
     * [[recluster]] publishes the retrained codebook + reassignment as
     * generation 4. */
   private[graft] def lsmRetrainRoot(s: SparkSession, dir: String): java.io.File =
-    IncPostings.cachedRoot(s, dir, "ivfvec-retrain", src = "embeddings") { root =>
+    IncPostings.lsmArtifact(s, dir, "ivfvec-retrain", src = "embeddings") { root =>
       val e = Tables(s, dir, "embeddings")
       val cents = Similarity.codebook(s, dir) // session-memoized v1 training
       val cbDir = IncPostings.newDataDir(root, "meta")
@@ -702,7 +648,7 @@ object IvfIndex {
     * drift, so a compaction losing a tombstone or a retention sweeping
     * a live segment fails the hash GATE, not just the spec. */
   private def vecLifecycleRoot(s: SparkSession, dir: String): java.io.File =
-    IncPostings.cachedRoot(s, dir, "ivfvec-lifecycle", src = "embeddings") { root =>
+    IncPostings.lsmArtifact(s, dir, "ivfvec-lifecycle", src = "embeddings") { root =>
       val e = Tables(s, dir, "embeddings")
       val cents = Similarity.codebook(s, dir) // session-memoized v1 training
       writeCodebook(s, cents, root.toString)
@@ -715,7 +661,7 @@ object IvfIndex {
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(root, "probe-before").toString)
       IncPostings.compact(s, root, layout = Seq("cid", "doc_id"))
-      // graceMs = 0: single-writer by construction (cachedRoot builds
+      // graceMs = 0: single-writer by construction (the store builds
       // once), and the query pins the terminal retained state.
       IncPostings.retain(s, root, keepGens = 1, graceMs = 0L)
     }

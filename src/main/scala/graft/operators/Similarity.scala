@@ -39,20 +39,13 @@ object Similarity {
 
   // ── Fixed-K codebook, memoized per (session, sf dir): training runs
   // one sample pass + CbRounds refinement aggregations; every sim_ivf_*
-  // entry shares the result. Same memo shape + stopped-session eviction
-  // rule as TextOps.bpeCache. (Unlike the former DedupCluster CC memo —
+  // entry shares the result. (Unlike the former DedupCluster CC memo —
   // now the cc-labels disk artifact — this caches a driver-side array,
   // not a persisted frame, so it pins nothing in the block manager.) ──
-  private val cbCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (SparkSession, Seq[(Long, Array[Double])])]
+  private val cbCache = new graft.SessionMemo[String, Seq[(Long, Array[Double])]]
 
-  private[operators] def codebook(s: SparkSession, dir: String): Seq[(Long, Array[Double])] = {
-    cbCache.filterInPlace((_, v) => !v._1.sparkContext.isStopped)
-    cbCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir),
-      (s, IvfIndex.trainCodebook(Tables(s, dir, "embeddings"))))._2
-  }
+  private[operators] def codebook(s: SparkSession, dir: String): Seq[(Long, Array[Double])] =
+    cbCache(s, dir)(IvfIndex.trainCodebook(Tables(s, dir, "embeddings")))
 
   /** Adaptive-K codebook for the ALL-PAIRS (SemDeDup) workload:
     * K = [[IvfIndex.semK]](corpus size) = max(K, ⌊√(n/2)⌋), so the
@@ -61,14 +54,11 @@ object Similarity {
     * metadata (no scan); training cost is the same sample + Lloyd
     * recurrence, just with more cells. Cached separately from the
     * search codebook (same memo + eviction shape). */
-  private def semCodebook(s: SparkSession, dir: String): Seq[(Long, Array[Double])] = {
-    cbCache.filterInPlace((_, v) => !v._1.sparkContext.isStopped)
-    cbCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir + "#sem"), {
-        val e = Tables(s, dir, "embeddings")
-        (s, IvfIndex.trainCodebook(e, IvfIndex.semK(e.count())))
-      })._2
-  }
+  private def semCodebook(s: SparkSession, dir: String): Seq[(Long, Array[Double])] =
+    cbCache(s, dir + "#sem") {
+      val e = Tables(s, dir, "embeddings")
+      IvfIndex.trainCodebook(e, IvfIndex.semK(e.count()))
+    }
 
   /** (vec_id, embedding, centroid_id): map-side coarse assignment. */
   private def assigned(s: SparkSession, dir: String): DataFrame = {

@@ -545,22 +545,16 @@ object TextOps {
     * vocabulary as (word, subword-count), persisted — the apply step is
     * then a vocabulary LOOKUP, never a per-occurrence re-encode. */
   // Session memo: the train and apply inventory entries share one
-  // training pass. Keyed by sessionUUID (globally unique —
-  // identityHashCode could collide and alias sessions); entries whose
-  // session has stopped are evicted on every access, so the map stays
-  // bounded by the number of LIVE sessions. (The former DedupCluster
-  // CC memo with the same shape became the cc-labels disk artifact;
-  // this one stays a memo because training returns a driver-side merge
-  // list plus a vocab-bounded frame, not a corpus-derived table.)
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (Seq[(Long, String, String, String, Long)], DataFrame)]
+  // training pass. (The former DedupCluster CC memo with the same shape
+  // became the cc-labels disk artifact; this one stays a memo because
+  // training returns a driver-side merge list plus a vocab-bounded
+  // frame, not a corpus-derived table.)
+  private val bpeCache = new graft.SessionMemo[String,
+    (Seq[(Long, String, String, String, Long)], DataFrame)]
 
   private def bpeTrain(s: SparkSession, dir: String):
-      (Seq[(Long, String, String, String, Long)], DataFrame) = {
-    bpeCache.filterInPlace((_, v) => !v._2.sparkSession.sparkContext.isStopped)
-    bpeCache.getOrElseUpdate((org.apache.spark.sql.GraftBridge.sessionUUID(s), dir), bpeTrainUncached(s, dir))
-  }
+      (Seq[(Long, String, String, String, Long)], DataFrame) =
+    bpeCache(s, dir)(bpeTrainUncached(s, dir))
 
   /** word → (spaced symbol sequence, corpus frequency), persisted. */
   private def bpeInitVocab(s: SparkSession, dir: String): DataFrame =

@@ -1447,7 +1447,8 @@ object KafkaWire {
     private var view: ClusterView = null
     private val dataConns = scala.collection.mutable.Map.empty[Int, Conn]
     private def connFor(partition: Int): Conn = {
-      if (view == null) { ensure(); view = clusterMetadata(conn, topic) }
+      ensure()
+      if (view == null) view = clusterMetadata(conn, topic)
       // leaderAddr raises the TYPED retryable NotLeaderException when
       // the view has no usable leader (offline row, dead broker id) —
       // the same refresh-and-reroute path a NOT_LEADER answer takes
@@ -1479,7 +1480,10 @@ object KafkaWire {
     private var txnHasWork = false
     private def ensure(): Unit = if (conn == null) {
       conn = new Conn(host, port)
-      nParts = partitionCount(conn, topic)
+      // the routing view doubles as the partition count: one Metadata
+      // round trip per connection (connFor refetches only after dropView)
+      view = clusterMetadata(conn, topic)
+      nParts = view.partitions
       if (idempotent && pid < 0L) {
         val (p, e) = initProducerId(conn, transactionalId)
         pid = p; pEpoch = e

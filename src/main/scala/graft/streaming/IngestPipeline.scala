@@ -23,9 +23,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * horizon lives in the source offset (checkpoint-restored), the
   * chunk-hash corpus state lives in the LAKE (parquet `seenPath`, not
   * stream state), the MinHash band/shingle/size artifacts likewise
-  * live under `lshPath` (appended per batch, idempotent by doc id —
-  * at scale they are bucketed by key / c_id so a trigger reads only
-  * its colliding buckets), the eval shingle set is a broadcast-sized
+  * live under `lshPath` (appended per batch, idempotent by doc id;
+  * they are not bucketed, so every trigger reads the whole seen,
+  * band, shingle and size tables and the lake's links — per-batch
+  * cost grows with the corpus), the eval shingle set is a broadcast-sized
   * batch frame, and delivered links live in the store itself (the
   * anti-join upsert). Nothing in the checkpoint grows with the
   * corpus — a restart replays at most one uncommitted micro-batch,

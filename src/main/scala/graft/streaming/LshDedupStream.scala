@@ -17,10 +17,13 @@ import org.apache.spark.sql.functions._
   * form is `foreachBatch { b => sink(gate(b, corpus artifacts)) }` —
   * the same constant-memory shape as [[DecontamStream]]. The corpus
   * band/shingle/size tables are batch frames built once and reused
-  * every trigger; in a deployment they're the persisted build-once
-  * artifacts (the IvfIndex/PostingsIndex contract), and the ONLY work
-  * per trigger is O(batch signatures + bucket collisions + verify
-  * joins on colliding ids) — the standing corpus is never rescanned.
+  * every trigger. The gate's own work is batch-sized (signatures of
+  * the arriving docs), but its joins take the corpus tables whole:
+  * finding bucket collisions scans every corpus band row, and the
+  * verify joins scan the corpus shingle and size tables, so a
+  * trigger's read cost grows with the standing corpus. Nothing is
+  * partitioned by band key or c_id yet, so no scan is pruned to the
+  * batch's colliding buckets.
   */
 object LshDedupStream {
 

@@ -6,8 +6,9 @@ import graft.operators.ArtifactCache
 import org.apache.spark.sql.functions._
 
 /** Disk-artifact contract: build-once/read-many, torso recovery, corpus
-  * invalidation, and the pointer-claim immutability guarantee under
-  * concurrent double-build and lost-cross-process races.
+  * invalidation and stale-generation eviction, and the pointer-claim
+  * immutability guarantee under concurrent double-build and
+  * lost-cross-process races, for parquet and directory artifacts.
   *
   * The battery is ABSTRACT over the commit primitive (the
   * IncPostingsSpec pattern): the artifact pointer commits through
@@ -134,6 +135,61 @@ abstract class ArtifactCacheBattery extends SparkSuite
     val entries = root.listFiles().map(_.getName)
       .filter(_.startsWith("lost")).toSet
     assert(entries === Set("lost.ptr", "lost-foreign"), entries.toString)
+  }
+
+  test("a cold build evicts stale generations of its own corpus only (bare-fingerprint rule)") {
+    val dir = mkSource(6)
+    def build(name: String) = ArtifactCache.parquet(spark, dir, name, Seq("documents")) {
+      Tables(spark, dir, "documents")
+    }.count()
+    build("kept")
+    val root = artifactRoot(dir)
+    val prefix = s"${dir.replaceAll("[^A-Za-z0-9._-]", "_")}-documents-"
+    // an older generation of this corpus (bare fingerprint): evicted
+    val stale = new java.io.File(root.getParentFile, prefix + "1-1")
+    // the root of ANOTHER corpus, a dir named `<dir>-documents-x`,
+    // whose name extends the prefix: kept
+    val otherCorpus = new java.io.File(root.getParentFile, prefix + "x-1-1")
+    try {
+      Seq(stale, otherCorpus).foreach(_.mkdirs())
+      build("second") // cold for this name: runs the eviction pass
+      assert(!stale.exists(), "stale bare-fingerprint generation must be evicted")
+      assert(otherCorpus.exists(), "another corpus's root must survive")
+      // the same-corpus artifact of another name is untouched
+      val kept = Files.readString(new java.io.File(root, "kept.ptr").toPath).trim
+      assert(new java.io.File(root, s"$kept/${ArtifactCache.Done}").exists())
+      assert(build("kept") === 6L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(otherCorpus)
+  }
+
+  test("concurrent callers of a directory artifact share one build and one directory") {
+    val dir = mkSource(4)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val building = new java.util.concurrent.CountDownLatch(1)
+    def call(): java.io.File =
+      ArtifactCache.dir(spark, dir, "slow", Seq("documents")) { d =>
+        builds.incrementAndGet()
+        Files.writeString(new java.io.File(d, "first").toPath, "1")
+        building.countDown()
+        Thread.sleep(1000) // the second caller arrives mid-build
+        Files.writeString(new java.io.File(d, "last").toPath, "2")
+      }
+    val f1 = Future(call())
+    assert(building.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    val f2 = Future(call())
+    val (d1, d2) = (Await.result(f1, 60.seconds), Await.result(f2, 60.seconds))
+    assert(d1 === d2, "both callers get the same directory")
+    assert(builds.get === 1, "the build ran once")
+    assert(Files.readString(new java.io.File(d1, "first").toPath) === "1")
+    assert(Files.readString(new java.io.File(d1, "last").toPath) === "2")
+    assert(new java.io.File(d1, ArtifactCache.Done).exists())
+    val entries = artifactRoot(dir).list()
+      .filterNot(_ == ".graft-commit-lock").toSeq.sorted
+    assert(entries === Seq(d1.getName, "slow.ptr").sorted,
+      "exactly one pointer and one directory remain")
   }
 
   test("an unreferenced torso directory is ignored and the artifact is rebuilt") {

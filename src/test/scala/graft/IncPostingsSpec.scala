@@ -465,34 +465,38 @@ abstract class IncPostingsBattery extends SparkSuite
   }
 
   test("cachedRoot eviction spares dash-suffixed sibling kinds (bare-fingerprint rule)") {
-    // A cold `xka` build must evict only stale `xka-<fp>` roots — not
-    // the `xka-lifecycle-<fp>` sibling, whose name shares the prefix
-    // (the IvfIndex.evictStaleSiblings prefix-collision guard, applied
-    // to the shared cache protocol). Sweep the kind's roots from prior
-    // runs first: a persisted _GRAFT_DONE marker would skip the cold
-    // build (and with it the eviction pass under test).
-    def rmRf(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRf)
-      f.delete()
+    // A cold `xka` build must evict only stale generations of its
+    // corpus — not the `xka-lifecycle` timeline, whose kind name
+    // extends `xka`'s. Each kind is its own artifact `lsm-<kind>` in
+    // the corpus root, and eviction sweeps only sibling ROOTS whose
+    // remainder after the corpus prefix is a bare length-mtime
+    // fingerprint. A fresh source dir per battery keeps the in-JVM
+    // artifact memo from serving an earlier suite's roots.
+    val dir = Files.createTempDirectory("incpostings-evict").toString
+    spark.range(4).select(col("id").as("doc_id"),
+        concat(lit("doc"), col("id")).as("text"))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    def timeline(kind: String) = IncPostings.lsmArtifact(spark, dir, kind) { root =>
+      IncPostings.commitBase(root,
+        operators.TextOps.trigramRowsOf(Tables(spark, dir, "documents")))
     }
-    // cachedRoot memoizes per-JVM, so each battery instantiation needs
-    // its own kind name — a swept-but-memoized root would read as a
-    // phantom failure in the second suite
-    val kindTag = "xka" + primitive.name.filter(_.isLetter)
-    Option(new java.io.File("/tmp/graft-incpostings-cache").listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.getName.contains(s"-$kindTag")).foreach(rmRf)
-    val lifecycle = IncPostings.cachedRoot(spark, sf001, s"$kindTag-lifecycle")(_.mkdirs())
-    assert(lifecycle.exists())
-    // Plant a stale same-kind sibling (bare fingerprint): must be swept.
-    val stale = new java.io.File(lifecycle.getParentFile,
-      lifecycle.getName.replace(s"$kindTag-lifecycle", kindTag)
-        .replaceAll("\\d+-\\d+$", "1-1"))
-    stale.mkdirs()
-    IncPostings.cachedRoot(spark, sf001, kindTag)(_.mkdirs())
-    assert(lifecycle.exists(),
-      s"cold $kindTag build must not sweep the $kindTag-lifecycle root")
-    assert(!stale.exists(), "stale bare-fingerprint sibling must be swept")
+    val lifecycle = timeline("xka-lifecycle")
+    val root = lifecycle.getParentFile
+    val prefix = s"${dir.replaceAll("[^A-Za-z0-9._-]", "_")}-documents-"
+    // an older generation of this corpus (bare fingerprint): swept
+    val stale = new java.io.File(root.getParentFile, prefix + "1-1")
+    // a dash-suffixed sibling (remainder `lifecycle-1-1`): kept
+    val suffixed = new java.io.File(root.getParentFile, prefix + "lifecycle-1-1")
+    try {
+      Seq(stale, suffixed).foreach(_.mkdirs())
+      val xka = timeline("xka") // cold for this kind: runs the eviction pass
+      assert(xka !== lifecycle)
+      assert(new java.io.File(lifecycle, operators.ArtifactCache.Done).exists(),
+        "cold xka build must not sweep the xka-lifecycle timeline")
+      assert(readSet(lifecycle) === readSet(xka))
+      assert(!stale.exists(), "stale bare-fingerprint sibling must be swept")
+      assert(suffixed.exists(), "a dash-suffixed sibling root must survive")
+    } finally Seq(suffixed, root).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
   }
 
   // ── the reader-horizon contract at the retention boundary (r12

@@ -233,22 +233,28 @@ class IvfIndexSpec extends SparkSuite {
   }
 
   test("stale-sibling eviction spares other index kinds (inc root survives a base build)") {
-    // r11 ADVICE: the base root's '<dir>-' prefix also string-matches
-    // the incremental root '<dir>-inc-<fp>', so a cold base build used
-    // to delete the just-built incremental index. The eviction filter
-    // now requires the post-prefix remainder to be a BARE fingerprint.
-    val parent = Files.createTempDirectory("ivf-evict").toFile
-    val prefix = "corpus-"
-    val target = new java.io.File(parent, prefix + "100-200")
-    val staleBase = new java.io.File(parent, prefix + "50-60")     // older fp: evict
-    val incSibling = new java.io.File(parent, prefix + "inc-100-200") // other kind: keep
-    val unrelated = new java.io.File(parent, "other-100-200")       // other corpus: keep
-    Seq(target, staleBase, incSibling, unrelated).foreach(_.mkdirs())
-    IvfIndex.evictStaleSiblings(spark, target, prefix)
-    assert(!staleBase.exists(), "stale same-kind sibling must be evicted")
-    assert(incSibling.exists(), "the -inc- root must survive a base-kind eviction")
-    assert(unrelated.exists())
-    assert(target.exists())
+    // The base and incremental indexes are two artifacts of one corpus
+    // generation. A cold base build evicts sibling roots of OLDER
+    // generations only — names whose remainder after the corpus prefix
+    // is a bare fingerprint — never the incremental index beside it.
+    val dir = Files.createTempDirectory("ivf-evict").toString
+    Files.copy(java.nio.file.Paths.get(s"$sf001/embeddings.parquet"),
+      java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
+    val inc = new java.io.File(IvfIndex.incPersistedPath(spark, dir))
+    val root = inc.getParentFile
+    val prefix = s"${dir.replaceAll("[^A-Za-z0-9._-]", "_")}-embeddings-"
+    val staleBase = new java.io.File(root.getParentFile, prefix + "50-60")    // older fp: evict
+    val otherKind = new java.io.File(root.getParentFile, prefix + "inc-50-60") // not a bare fp: keep
+    try {
+      Seq(staleBase, otherKind).foreach(_.mkdirs())
+      val base = IvfIndex.persistedPath(spark, dir) // cold: runs the eviction pass
+      assert(base !== inc.toString)
+      assert(!staleBase.exists(), "stale same-corpus generation must be evicted")
+      assert(otherKind.exists(), "a root whose remainder is not a bare fingerprint must survive")
+      assert(new java.io.File(inc, operators.ArtifactCache.Done).exists(),
+        "the inc index must survive a base build")
+      assert(IvfIndex.currentVersion(spark, inc.toString).isDefined)
+    } finally Seq(otherKind, root).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
   }
 
   test("int8 quantization: error bounded by half a step, cosine recall ~1") {

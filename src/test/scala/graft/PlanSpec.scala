@@ -442,13 +442,21 @@ class PlanSpec extends SparkSuite {
   }
 
   test("post-recluster search reads ONE compacted segment with its own codebook") {
-    val plan = physical(SparkEntry.queries("sim_ivf_lsm_retrain")(spark, sf001))
+    // scan locations print in full only past the default 100-char cap,
+    // which cuts them off before the artifact's directory name
+    val key = "spark.sql.maxMetadataStringLength"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1000")
+    val plan =
+      try physical(SparkEntry.queries("sim_ivf_lsm_retrain")(spark, sf001))
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     // commitReplace leaves a single segment and zero tombstones: the
-    // VIEW side is exactly one LSM-cache parquet scan with no
+    // VIEW side is exactly one scan of the ivfvec-retrain artifact with no
     // anti-join — the read-optimized shape recovered after drift.
     // (The query side unions the corpus construction; that's input
     // prep, not index reads.)
-    assert(plan.split("graft-incpostings-cache").length - 1 == 1, plan)
+    val artifact = graft.operators.IvfIndex.lsmRetrainRoot(spark, sf001).toString
+    assert(plan.split(java.util.regex.Pattern.quote(artifact)).length - 1 == 1, plan)
     assert(!plan.contains("LeftAnti"), plan)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
