@@ -2,6 +2,7 @@ package graft.news
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The parquet lake layer (SURVEY.md §7.1 module 5).
   *
@@ -34,15 +35,19 @@ object Lake {
     * re-appending the same batch is a no-op, which is what makes
     * at-least-once delivery exactly-once-effect (T1/T5).
     *
+    * The store's links are read with their known schema, so no call
+    * reads parquet footers to infer it.
+    *
     * Returns the rows actually written. */
   def upsertByLink(spark: SparkSession, batch: DataFrame, storePath: String): DataFrame = {
     val deduped = batch.dropDuplicates("link")
     val fresh =
       if (pathExists(spark, storePath)) {
-        val existing = spark.read.parquet(storePath).select("link")
+        val existing = spark.read.schema(new StructType().add("link", StringType))
+          .parquet(storePath)
         deduped.join(existing, Seq("link"), "left_anti")
       } else deduped
-    // Two jobs on `fresh` (count + write) — persist to avoid recompute.
+    // Two jobs on `fresh` (head + write) — persist to avoid recompute.
     fresh.persist()
     if (fresh.head(1).nonEmpty)
       fresh.write.mode(SaveMode.Append).parquet(storePath)

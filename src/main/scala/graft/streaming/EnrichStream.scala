@@ -78,14 +78,35 @@ object EnrichStream {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        batch.persist() // shared by both sinks — computed once
-        val stamped = batch.withColumn("partition_ts",
-          coalesce(col("updated_ts"), col("proctime")))
-        Lake.upsertByLink(spark, stamped, storePath)
-        Lake.append(stamped, lakePath, "partition_ts")
-        batch.unpersist()
-        ()
+        withRows(batch) { rows => // shared by both sinks — computed once
+          val stamped = rows.withColumn("partition_ts",
+            coalesce(col("updated_ts"), col("proctime")))
+          Lake.upsertByLink(rows.sparkSession, stamped, storePath)
+          Lake.append(stamped, lakePath, "partition_ts")
+        }
       }
       .start()
+
+  /** Run a `foreachBatch` body on a micro-batch's rows, computed once,
+    * unless it has none.
+    *
+    * The watermark dedup in [[enrichParsed]] makes Spark run a zero-row
+    * micro-batch after each data batch, only so that the dedup can
+    * evict expired state; sink work on it would append empty files.
+    * The batch is persisted and counted first: the count runs every
+    * partition, so the dedup's state store still commits its version
+    * and evicts.
+    *
+    * `body` gets a frame over the cached rows' RDD, not the batch
+    * itself: a self-join re-instances the batch's relation, and a
+    * re-instanced foreachBatch relation misses the cache, so each such
+    * plan would recompute the whole micro-batch (source read, parse,
+    * enrich and the stateful dedup). */
+  def withRows(batch: DataFrame)(body: DataFrame => Unit): Unit = {
+    batch.persist()
+    try {
+      if (batch.count() > 0)
+        body(batch.sparkSession.createDataFrame(batch.rdd, batch.schema))
+    } finally batch.unpersist(blocking = false)
+  }
 }

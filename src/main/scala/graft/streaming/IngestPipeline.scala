@@ -70,55 +70,59 @@ object IngestPipeline {
     * append. Public so the chain can hang off ANY enriched source
     * (kafka, file, MemoryStream — StreamBench drives it this way), not
     * only the graft-rss reader `start` wires up. Expects `link` +
-    * `summary` columns (plus whatever payload should land in the lake). */
+    * `summary` columns (plus whatever payload should land in the lake).
+    *
+    * A batch without rows (the no-data micro-batch the watermark dedup
+    * of [[EnrichStream.enrichParsed]] asks for) is counted and then
+    * left: no gate runs and no state file is appended. A batch with
+    * rows is cached by that count, and every gate and write below
+    * reads the cached rows ([[EnrichStream.withRows]]). */
   def processBatch(batch: DataFrame, storePath: String, seenPath: String,
-      lshPath: String, evalShingles: DataFrame): Unit = {
-    val s = batch.sparkSession
-    batch.persist() // scored by two gates + written — computed once
-    val docs = batch.select(col("link").as("doc_id"),
-      col("summary").as("text"))
-    val seen =
-      if (Lake.pathExists(s, seenPath)) s.read.parquet(seenPath)
-      else SpanDedupStream.emptySeen(s)
-    val span = SpanDedupStream.score(docs, seen)
-      .withColumnRenamed("doc_id", "link")
-    val (bandsP, shP, szP) =
-      (s"$lshPath/bands", s"$lshPath/shingles", s"$lshPath/sizes")
-    val (cBands, cSh, cSz) =
-      if (Lake.pathExists(s, szP))
-        (s.read.parquet(bandsP), s.read.parquet(shP), s.read.parquet(szP))
-      else LshDedupStream.emptyArtifacts(s)
-    val lsh = LshDedupStream.gate(docs, cBands, cSh, cSz)
-      .withColumnRenamed("doc_id", "link")
-    val dec = DecontamStream.score(docs, evalShingles)
-      .withColumnRenamed("doc_id", "link")
-    val gated = batch.join(span, Seq("link"), "left")
-      .join(lsh, Seq("link"), "left")
-      .join(dec, Seq("link"), "left")
-    Lake.upsertByLink(s, gated, storePath)
-    // The batch's new hashes extend the corpus state — computed
-    // against the PRE-append seen table (the gates above already
-    // ran), materialized before the append so the anti-join never
-    // reads the files it is writing.
-    val fresh = SpanDedupStream.freshHashes(docs, seen).persist()
-    fresh.count()
-    fresh.write.mode(SaveMode.Append).parquet(seenPath)
-    fresh.unpersist(blocking = false)
-    // LSH artifacts likewise extend by the batch's NEW doc ids only
-    // (anti-join on the sizes table = replay-idempotent append),
-    // materialized before any write for the same read-own-writes
-    // reason.
-    val newDocs = docs.dropDuplicates("doc_id")
-      .join(cSz.select(col("c_id").as("doc_id")), Seq("doc_id"), "left_anti")
-      .persist()
-    newDocs.count()
-    val (nb, nsh, nsz) = LshDedupStream.corpusArtifacts(newDocs)
-    val mats = Seq(nb, nsh, nsz).map { d => val p = d.persist(); p.count(); p }
-    mats(0).write.mode(SaveMode.Append).parquet(bandsP)
-    mats(1).write.mode(SaveMode.Append).parquet(shP)
-    mats(2).write.mode(SaveMode.Append).parquet(szP)
-    mats.foreach(_.unpersist(blocking = false))
-    newDocs.unpersist(blocking = false)
-    batch.unpersist(blocking = false)
-  }
+      lshPath: String, evalShingles: DataFrame): Unit =
+    EnrichStream.withRows(batch) { rows =>
+      val s = rows.sparkSession
+      val docs = rows.select(col("link").as("doc_id"),
+        col("summary").as("text"))
+      // gate state is read with its known schema: no footer-reading
+      // inference job per table per trigger
+      val seen =
+        if (Lake.pathExists(s, seenPath))
+          s.read.schema(SpanDedupStream.SeenSchema).parquet(seenPath)
+        else SpanDedupStream.emptySeen(s)
+      val span = SpanDedupStream.score(docs, seen)
+        .withColumnRenamed("doc_id", "link")
+      val (bandsP, shP, szP) =
+        (s"$lshPath/bands", s"$lshPath/shingles", s"$lshPath/sizes")
+      val (cBands, cSh, cSz) =
+        if (Lake.pathExists(s, szP))
+          (s.read.schema(LshDedupStream.BandsSchema).parquet(bandsP),
+            s.read.schema(LshDedupStream.ShinglesSchema).parquet(shP),
+            s.read.schema(LshDedupStream.SizesSchema).parquet(szP))
+        else LshDedupStream.emptyArtifacts(s)
+      val lsh = LshDedupStream.gate(docs, cBands, cSh, cSz)
+        .withColumnRenamed("doc_id", "link")
+      val dec = DecontamStream.score(docs, evalShingles)
+        .withColumnRenamed("doc_id", "link")
+      val gated = rows.join(span, Seq("link"), "left")
+        .join(lsh, Seq("link"), "left")
+        .join(dec, Seq("link"), "left")
+      Lake.upsertByLink(s, gated, storePath)
+      // The batch's new hashes and new doc ids extend the corpus state,
+      // each computed against the PRE-append tables the gates read.
+      // The appends are written straight from their plans: `seen` and
+      // `cSz` listed their files when they were created above, so no
+      // append below can be read back by the anti-join that feeds it.
+      // `newDocs` (ids not yet in the sizes table: a replay-idempotent
+      // append) is cached only because three writes share it.
+      SpanDedupStream.freshHashes(docs, seen)
+        .write.mode(SaveMode.Append).parquet(seenPath)
+      val newDocs = docs.dropDuplicates("doc_id")
+        .join(cSz.select(col("c_id").as("doc_id")), Seq("doc_id"), "left_anti")
+        .persist()
+      val (nb, nsh, nsz) = LshDedupStream.corpusArtifacts(newDocs)
+      nb.write.mode(SaveMode.Append).parquet(bandsP)
+      nsh.write.mode(SaveMode.Append).parquet(shP)
+      nsz.write.mode(SaveMode.Append).parquet(szP)
+      newDocs.unpersist(blocking = false)
+    }
 }

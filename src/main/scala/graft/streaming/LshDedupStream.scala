@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 /** Streaming near-duplicate gate — the ingest-time face of the batch
   * `dedup_incremental` operator (operators/Dedup.scala): arriving
@@ -44,19 +45,21 @@ object LshDedupStream {
     (bands, ex, sizes)
   }
 
-  /** Empty artifacts with STRING ids — the lake-pipeline bootstrap
-    * (links are the doc ids there), mirroring
+  /** Schemas of the persisted (bands, shingles, sizes) artifacts with
+    * STRING ids (links are the doc ids in the lake pipeline). Readers
+    * pass them to `read.schema` so no trigger infers them from the
+    * parquet footers. */
+  val BandsSchema: StructType =
+    new StructType().add("c_id", StringType).add("band", IntegerType).add("key", StringType)
+  val ShinglesSchema: StructType = new StructType().add("c_id", StringType).add("s", StringType)
+  val SizesSchema: StructType = new StructType().add("c_id", StringType).add("c_sz", LongType)
+
+  /** Empty artifacts — the lake-pipeline bootstrap, mirroring
     * [[SpanDedupStream.emptySeen]]. */
-  def emptyArtifacts(s: org.apache.spark.sql.SparkSession)
-      : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types._
-    def empty(fields: StructField*) = s.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(fields.toArray))
-    (empty(StructField("c_id", StringType), StructField("band", IntegerType),
-        StructField("key", StringType)),
-      empty(StructField("c_id", StringType), StructField("s", StringType)),
-      empty(StructField("c_id", StringType), StructField("c_sz", LongType)))
+  def emptyArtifacts(s: SparkSession): (DataFrame, DataFrame, DataFrame) = {
+    def empty(schema: StructType) =
+      s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    (empty(BandsSchema), empty(ShinglesSchema), empty(SizesSchema))
   }
 
   /** Small-file compaction over the three persisted artifacts: every

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Ingest-time chunk-span deduplication — the streaming face of the
   * batch `dedup_chunk_spans` operator (operators/Dedup.scala): each
@@ -16,9 +17,10 @@ import org.apache.spark.sql.functions._
   * through `foreachBatch { b => sink(score(b, seen)); seen += fresh(b,
   * seen) }`, because per-hash streaming state would grow one state row
   * per corpus chunk inside the checkpoint. As a batch table the hash
-  * set lives in the lake (parquet/bucketed by hash), merges idempotently
-  * (distinct union), and is exactly what the batch operator would have
-  * built.
+  * set lives in the lake as plain parquet appended per batch (not
+  * bucketed or partitioned by hash, so every trigger scans all of it),
+  * merges idempotently (distinct union), and is exactly what the batch
+  * operator would have built.
   *
   * Scale shape matches the batch op: chunks are content-addressed, so
   * the only per-batch work is a map-side chunk explode, one
@@ -72,9 +74,12 @@ object SpanDedupStream {
     Dedup.chunkRowsOf(docs).select(col("h")).distinct()
       .join(seen.select(col("h")), Seq("h"), "left_anti")
 
+  /** The seen-hash table's schema: one md5 chunk-hash column `h`.
+    * Readers pass it to `read.schema` so no trigger infers it from
+    * the parquet footers. */
+  val SeenSchema: StructType = new StructType().add("h", StringType)
+
   /** An empty seen-hash table (bootstrap state). */
-  def emptySeen(s: org.apache.spark.sql.SparkSession): DataFrame = {
-    import s.implicits._
-    Seq.empty[String].toDF("h")
-  }
+  def emptySeen(s: SparkSession): DataFrame =
+    s.createDataFrame(java.util.Collections.emptyList[Row](), SeenSchema)
 }

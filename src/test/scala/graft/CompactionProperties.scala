@@ -27,8 +27,7 @@ object CompactionProperties extends Properties("graft.compaction") {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    .config("spark.sql.warehouse.dir", SparkSuite.warehouse)
     .getOrCreate()
 
   private val Target = 1000L

@@ -31,8 +31,7 @@ object QuantileProperties extends Properties("graft.quantiles") {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    .config("spark.sql.warehouse.dir", SparkSuite.warehouse)
     .getOrCreate()
 
   /** One group's rows: (key, Option[v1], Option[v2]) with deliberate
